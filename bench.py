@@ -765,21 +765,6 @@ def query_bench(spark) -> tuple[dict, dict]:
         idx.scalars.n_docs, idx.scalars.avgdl, slop=3, k=TOPK).collect())
     pos_idx.unpersist()
 
-    # block-max pruning effectiveness counters (recorded, not timed):
-    # hot-terms query (pruning mostly from the heap threshold) AND a
-    # hot+rare mix (the rare term's idf lifts theta fast — the case
-    # block-max exists for, Ding & Suel 2011)
-    from searchengine_spark.operators.wand import wand_pruning_stats
-
-    wand_stats = {
-        "hot": wand_pruning_stats(
-            idx.doc_segments, single_q, idx.term_stats, idx.scalars.n_docs,
-            idx.scalars.avgdl, k=TOPK),
-        "hot_rare_mix": wand_pruning_stats(
-            idx.doc_segments, f"{top_terms[0]} {top_terms[-1]}",
-            idx.term_stats, idx.scalars.n_docs, idx.scalars.avgdl, k=TOPK),
-    }
-
     # salting / skew evidence (north rule: "skew handled explicitly").
     # The synthetic corpus is Zipfian, so the hottest term lands in nearly
     # every doc; build the salted term-layout segments with a df_target
@@ -1080,8 +1065,8 @@ def query_bench(spark) -> tuple[dict, dict]:
     skewed.unpersist()
 
     docs.unpersist()
-    return timings, {"corpus_docs": n_docs_corpus, "wand_pruning": wand_stats,
-                     "skew": skew_stats, "ann_recall_at_10": ann_recall}
+    return timings, {"corpus_docs": n_docs_corpus, "skew": skew_stats,
+                     "ann_recall_at_10": ann_recall}
 
 
 def _materialized_index(docs):
@@ -2086,10 +2071,6 @@ def _headline_line(full: dict, build: dict, timings: dict, extra: dict,
             build_headline[key] = val
     if "error" in build:
         build_headline["error"] = str(build["error"])[:200]
-    pruning = {}
-    for case, st in (extra.get("wand_pruning") or {}).items():
-        if st.get("candidates"):
-            pruning[case] = round(st["scored"] / st["candidates"], 3)
     headline = {
         "metric": full["metric"],
         "value": full["value"],
@@ -2099,7 +2080,6 @@ def _headline_line(full: dict, build: dict, timings: dict, extra: dict,
         "build": build_headline,
         "corpus_docs": extra.get("corpus_docs"),
         "ann_recall_at_10": extra.get("ann_recall_at_10"),
-        "wand_scored_frac": pruning or None,
         # the cluster determinism gate's verdict rides the headline (a
         # few bytes); full hashes/walls live in the sidecar block
         "cluster_hash_ok": (
@@ -2137,7 +2117,7 @@ def _headline_line(full: dict, build: dict, timings: dict, extra: dict,
                 break
             headline["queries"].pop(k)
             line = json.dumps(headline, separators=(",", ":"))
-    for drop in ("wand_scored_frac", "ann_recall_at_10", "corpus_docs",
+    for drop in ("ann_recall_at_10", "corpus_docs",
                  "queries"):
         if len(line) <= 1900:
             break

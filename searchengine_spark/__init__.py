@@ -11,7 +11,7 @@ as idiomatic Spark DataFrame programs:
 - per-partition compressed posting-list segments
   (delta + varint docID gaps, block-max metadata, salting for skewed terms),
 - BM25 / reference-formula top-k retrieval (exhaustive relational plan and
-  a block-max WAND pruned plan),
+  a per-shard dense numpy scorer over the segments),
 - manifest-driven resumable builds with per-partition lineage + metrics.
 
 No RDDs, no custom Catalyst rules, no per-row Python UDFs.

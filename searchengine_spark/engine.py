@@ -6,7 +6,7 @@ HTTP loop serves ``Search(query)`` per request
 (SearchEngine Engine/Engine/Engine.cs:32-124). Here:
 
     eng = SearchEngine.load(spark, index_dir)     # from pipeline.run_build
-    eng.search("some words", k=10)                # block-max WAND
+    eng.search("some words", k=10)                # dense per-shard scorer
     eng.search("some words", k=10, mode="exhaustive")
     eng.search_batch([(0, "a b"), (1, "c")], k=10)
     eng.fetch(doc_ids)                            # doc-store lookup
@@ -30,6 +30,7 @@ from searchengine_spark.operators.forward import CorpusScalars
 from searchengine_spark.operators.ingest import tf_from_doc_map
 from searchengine_spark.operators.topk import score_topk
 from searchengine_spark.operators.wand import (
+    query_qf,
     wand_topk,
     wand_topk_batch,
     wand_topk_terms,
@@ -180,15 +181,14 @@ class SearchEngine:
 
     # -- query ----------------------------------------------------------
 
-    def _idf_for(self, query: str) -> dict[str, float]:
-        """idf per query term from the warm stats cache, collecting
-        term_stats rows ONLY for never-seen terms (out-of-vocabulary
-        terms memoized as df=0 so they never re-collect). Warm repeat
-        queries cost zero Spark actions for stats."""
+    def _idf_for(self, terms) -> dict[str, float]:
+        """idf per in-vocabulary term of ``terms`` from the warm stats
+        cache, collecting term_stats rows ONLY for never-seen terms
+        (out-of-vocabulary terms memoized as df=0 so they never
+        re-collect). Warm repeat terms cost zero Spark actions for stats,
+        for single queries and batches alike."""
         from searchengine_spark.operators.segments import idf_np
-        from searchengine_spark.operators.wand import query_qf
 
-        terms = list(query_qf(query))
         missing = [t for t in terms if t not in self._df_memo]
         if missing:
             rows = (
@@ -206,10 +206,11 @@ class SearchEngine:
 
     def search(self, query: str, k: int = 10,
                mode: str | None = None) -> DataFrame:
-        """Top-k (doc_id, score). mode: "wand" (block-max pruned),
+        """Top-k (doc_id, score). mode: "wand" (the dense per-shard
+        scorer over the doc-sharded layout, operators/wand.py),
         "exhaustive" (relational verification path), "reference" (the
-        reference formula incl. its 1000-posting cap), "term" (block-max
-        WAND over the term-partitioned layout — the merged/incremental
+        reference formula incl. its 1000-posting cap), "term" (the same
+        scorer over the term-partitioned layout — the merged/incremental
         serving path, operators/wand.py wand_topk_terms). Tombstoned
         docs are masked in every mode.
 
@@ -241,14 +242,14 @@ class SearchEngine:
                                    self.term_stats, self.scalars.n_docs,
                                    self.scalars.avgdl, k=k,
                                    exclude=dead or None,
-                                   idf_map=self._idf_for(query))
+                                   idf_map=self._idf_for(query_qf(query)))
         if mode == "wand":
             if self.doc_segments is None:
                 raise ValueError("index has no doc-segment layout")
             return wand_topk(self.doc_segments, query, self.term_stats,
                              self.scalars.n_docs, self.scalars.avgdl, k=k,
                              exclude=dead or None,
-                             idf_map=self._idf_for(query))
+                             idf_map=self._idf_for(query_qf(query)))
         from searchengine_spark.operators.deletes import exclude_tf
 
         tf = exclude_tf(tf_from_doc_map(self.doc_map), set(dead))
@@ -799,15 +800,19 @@ class SearchEngine:
     def search_batch(self, queries: list[tuple[int, str]], k: int = 10,
                      spread: int | None = None) -> DataFrame:
         """(query_id, rank, doc_id, score) for many queries in one pass.
-        Tombstoned docs are masked like single-query search. ``spread``:
-        explicit task count for the grouped WAND stage (see
-        operators/wand.py _spread_groups; default 4x parallelism)."""
+        Tombstoned docs are masked like single-query search, and idf
+        comes from the same warm stats cache, so a batch of known terms
+        runs no stats lookup job. ``spread``: explicit task count for the
+        grouped scoring stage (see operators/wand.py _spread_groups;
+        default 4x parallelism)."""
         if self.doc_segments is None:
             raise ValueError("index has no doc-segment layout")
+        terms = {t for _, q in queries for t in query_qf(q)}
         return wand_topk_batch(self.doc_segments, queries, self.term_stats,
                                self.scalars.n_docs, self.scalars.avgdl, k=k,
                                exclude=self.tombstones() or None,
-                               spread=spread)
+                               spread=spread,
+                               idf_map=self._idf_for(terms))
 
     def fetch(self, doc_ids: list[int]) -> DataFrame:
         """Doc-store lookup (the reference's GetTitle/wikitext seek,

@@ -152,9 +152,9 @@ def q_merge_roundtrip(spark, sf_dir):
 
 def q_wand_term_topk(spark, sf_dir, query: str = "spark join fast",
                      k: int = 10):
-    """Block-max WAND over the TERM-partitioned (merged/incremental)
+    """Per-range top-k over the TERM-partitioned (merged/incremental)
     layout — wand_topk_terms: partition-pruned fetch of the query's
-    (term, salt) rows, one grouped-map WAND over the co-located lists.
+    (term, salt) rows, re-split by doc range and scored per range.
     Must equal the exhaustive BM25 oracle exactly."""
     from searchengine_spark.operators.segments import build_term_segments
     from searchengine_spark.operators.wand import wand_topk_terms
@@ -208,7 +208,7 @@ ORDER BY score DESC, doc_id ASC LIMIT {k}"""
 
 
 def _wand_topk(query: str, k: int = 10):
-    """Block-max WAND over doc-sharded segments — must match the exhaustive
+    """Per-shard top-k over doc-sharded segments — must match the exhaustive
     BM25 oracle SQL exactly (rank + rounded score).
 
     Over-fetch then round-and-relimit: the oracle selects its k rows on
@@ -320,7 +320,7 @@ _BATCH_QUERIES = ["spark join fast", "dup", "the the data", "window agg stream",
 
 
 def q_batch_wand_topk(spark, sf_dir, k: int = 5):
-    """Batch block-max WAND: all queries in one segment scan, posting
+    """Batch per-shard top-k: all queries in one segment scan, posting
     lists decoded once per shard. Oracle = the exhaustive batch SQL."""
     from searchengine_spark.operators.wand import wand_topk_batch
 

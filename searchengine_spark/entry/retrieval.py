@@ -1312,16 +1312,14 @@ _FEDW_SPLIT_CHARS = 300
 
 
 def q_federated_wand_topk(spark, sf_dir):
-    """Federated block-max WAND over per-slice SEGMENT layouts
+    """Federated per-shard top-k over per-slice SEGMENT layouts
     (operators/federation.py federated_wand_topk): corpus split into a
-    short-doc and a long-doc slice (n_chars < 300) so each slice's baked
+    short-doc and a long-doc slice (n_chars < 300) so each slice's own
     avgdl diverges from the global one, each slice's segments built
     INDEPENDENTLY with its own stats, then queried together with merged
-    global statistics and the max(1, avgdl_g/avgdl_s) block-max
-    inflation that keeps pruning admissible. The oracle is plain
-    monolithic exhaustive BM25 — the strongest slice-invariance claim:
-    even the PRUNED serving path is bit-identical across the
-    federation boundary."""
+    global statistics. The oracle is plain monolithic exhaustive BM25 —
+    the strongest slice-invariance claim: the serving path is
+    bit-identical across the federation boundary."""
     from searchengine_spark.operators.federation import federated_wand_topk
     from searchengine_spark.operators.segments import build_doc_segments
 

@@ -8,9 +8,9 @@ Lucene uses: deleted docs are masked at query time immediately, and
 removed physically when their segment is rewritten):
 
 - **Tombstone mask** (query time, O(|deletes|)): excluded doc_ids are
-  skipped inside the WAND kernel before scoring — upper bounds are
-  untouched, so pruning stays admissible; the top-k fills with the next
-  best live docs, rank-identical to scoring the corpus without them.
+  masked inside the per-shard scoring kernel before top-k selection;
+  the top-k fills with the next best live docs, rank-identical to
+  scoring the corpus without them.
   The exhaustive path anti-joins the tf rows instead.
 - **Physical purge** (compaction time, cost ∝ affected shards): only
   shards containing tombstoned docs are decoded, filtered, and

@@ -134,38 +134,19 @@ def federated_wand_topk(
     merged_scalars: CorpusScalars | None = None,
     idf_map: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Block-max WAND across independently-built SEGMENT layouts — the
+    """Per-shard top-k across independently-built SEGMENT layouts — the
     federation's serving path (federated_topk is the exhaustive
     verification twin): per-slice doc-sharded segments queried together,
     scores computed with MERGED global statistics, result bit-identical
-    to WAND over one monolithic index (which itself equals exhaustive
-    global BM25 — asserted transitively in tests).
+    to the scorer over one monolithic index (which itself equals
+    exhaustive global BM25 — asserted transitively in tests).
 
-    The subtlety is block-max admissibility. A segment's
-    ``block_max_core`` is the idf-free BM25 core maximized per block,
-    baked at BUILD time with the SLICE's avgdl; idf arrives at query
-    time from term_stats (so the stats merge handles df/N for free).
-    But querying with the GLOBAL avgdl changes the core itself: for
-    avgdl_g > avgdl_s the true core of every posting GROWS (length
-    normalization shrinks), so the slice's baked maxima underestimate
-    and WAND could prune true hits. The exact worst-case growth is
-    bounded:
-
-        core(avgdl_g)/core(avgdl_s)
-          = (tf + k1(1-b) + k1·b·dl/avgdl_s)
-          / (tf + k1(1-b) + k1·b·dl/avgdl_g)   <=  avgdl_g/avgdl_s
-
-    (monotone in dl; the sup as dl→inf is the avgdl ratio), so scaling
-    each slice's block maxima by max(1, avgdl_g/avgdl_s) restores
-    admissibility — a per-slice constant folded into the array column,
-    no re-encode. Slices with avgdl above global keep their (already
-    admissible, slightly loose) maxima. Exact scoring inside the kernel
-    uses the stored per-posting (tf, dl) with the global avgdl, so
-    final scores are exact global BM25 regardless of the bound scaling.
-
-    Shard keys are made slice-unique (shard*n_slices + i) so one WAND
-    task never mixes two slices' lists of the same term; the k-merge
-    across tasks is the ordinary per-shard top-k union.
+    Segments store per-posting (tf, dl) and nothing derived from the
+    slice's own statistics that scoring reads, so the kernel scores
+    every slice with the global idf and avgdl directly. Shard keys are
+    made slice-unique (shard*n_slices + i) so one scoring task never
+    mixes two slices' rows of the same term; the k-merge across tasks is
+    the ordinary per-shard top-k union.
     """
     from searchengine_spark.operators.wand import wand_topk
 
@@ -173,33 +154,21 @@ def federated_wand_topk(
         else merge_slice_stats(slice_stats)
     g = merged_scalars if merged_scalars is not None \
         else merge_slice_scalars(slice_scalars)
-    unioned = _federated_segments(slice_segments, slice_scalars, g)
+    unioned = _federated_segments(slice_segments)
     return wand_topk(unioned, query, stats, g.n_docs, g.avgdl, k=k,
                      exclude=exclude, idf_map=idf_map)
 
 
 def _federated_segments(
     slice_segments: list[tuple[str, DataFrame]],
-    slice_scalars: list[CorpusScalars],
-    g: CorpusScalars,
 ) -> DataFrame:
-    """Union per-slice doc-segment layouts into one WAND-servable table:
-    slice-unique shard keys + the max(1, avgdl_g/avgdl_s) block-max
-    inflation (admissibility proof in federated_wand_topk)."""
+    """Union per-slice doc-segment layouts into one servable table with
+    slice-unique shard keys (see federated_wand_topk)."""
     n = len(slice_segments)
-    parts = []
-    for i, (key, segs) in enumerate(slice_segments):
-        s_avgdl = slice_scalars[i].avgdl or g.avgdl
-        infl = max(1.0, g.avgdl / s_avgdl) if s_avgdl else 1.0
-        parts.append(
-            segs.withColumn(
-                "shard",
-                (F.col("shard").cast("long") * n + F.lit(i)),
-            ).withColumn(
-                "block_max_core",
-                F.expr(f"transform(block_max_core, x -> x * {infl!r}D)"),
-            )
-        )
+    parts = [
+        segs.withColumn("shard", F.col("shard").cast("long") * n + F.lit(i))
+        for i, (_, segs) in enumerate(slice_segments)
+    ]
     unioned = parts[0]
     for p in parts[1:]:
         unioned = unioned.unionByName(p)
@@ -243,8 +212,8 @@ class FederatedEngine:
     day_epoch << 40), which load() verifies from each slice's
     scalars.json + n_docs. Statistics are merged at load (one
     vocabulary-sized agg, cached like SearchEngine's term_stats);
-    queries run block-max WAND across every slice's segments with the
-    admissibility-corrected bounds (federated_wand_topk).
+    queries run the per-shard scorer across every slice's segments with
+    the merged statistics (federated_wand_topk).
 
     Serving shape at 10^12 turns: a new daily slice joins the
     federation by appearing in ``index_dirs`` — no rebuild, no merge
@@ -264,11 +233,9 @@ class FederatedEngine:
         # query terms cost zero Spark actions for idf
         self._df_memo: dict = {}
 
-    def _idf_for(self, query: str) -> dict[str, float]:
+    def _idf_for(self, terms) -> dict[str, float]:
         from searchengine_spark.operators.segments import idf_np
-        from searchengine_spark.operators.wand import query_qf
 
-        terms = list(query_qf(query))
         missing = [t for t in terms if t not in self._df_memo]
         if missing:
             rows = (self.stats.filter(F.col("term").isin(missing))
@@ -308,26 +275,24 @@ class FederatedEngine:
         return FederatedEngine(spark, engines)
 
     def search(self, query: str, k: int = 10) -> DataFrame:
-        """Top-k (doc_id, score) across every slice — block-max WAND
-        with merged stats; per-slice tombstones composed into one
+        """Top-k (doc_id, score) across every slice — the per-shard
+        scorer with merged stats; per-slice tombstones composed into one
         exclude set (ids are globally unique by the load contract).
 
         Mixed layouts are routed per slice: doc-sharded slices run as
-        ONE federated union (bound-inflated, federated_wand_topk);
-        slices with only the term-partitioned layout (a compacted
-        STREAMING index exported by streaming/incremental.py — "today's
-        slice") each run wand_topk_terms with the SAME merged stats —
-        its block maxes are recomputed at query time with the global
-        avgdl (wand.py _Postings.from_arrays), so no inflation is
-        needed there. The k-row candidate sets merge under the pinned
-        (score desc, doc_id asc) order — exact global BM25 either way,
-        so the routing is invisible in the results."""
-        from searchengine_spark.operators.wand import wand_topk_terms
+        ONE federated union (federated_wand_topk); slices with only the
+        term-partitioned layout (a compacted STREAMING index exported by
+        streaming/incremental.py — "today's slice") each run
+        wand_topk_terms with the SAME merged stats. The k-row candidate
+        sets merge under the pinned (score desc, doc_id asc) order —
+        exact global BM25 either way, so the routing is invisible in the
+        results."""
+        from searchengine_spark.operators.wand import query_qf, wand_topk_terms
 
         dead = frozenset().union(*[e.tombstones() for e in self.engines])
         doc_es = [e for e in self.engines if e.doc_segments is not None]
         term_es = [e for e in self.engines if e.doc_segments is None]
-        idf_map = self._idf_for(query)
+        idf_map = self._idf_for(query_qf(query))
         outs = []
         if doc_es:
             outs.append(federated_wand_topk(
@@ -355,10 +320,11 @@ class FederatedEngine:
     def search_batch(self, queries: list, k: int = 10) -> DataFrame:
         """(query_id, rank, doc_id, score) for many queries in one pass
         across every doc-layout slice (wand.py wand_topk_batch over the
-        inflated union — postings decoded once per slice-shard for ALL
-        queries). Term-layout slices are a per-query path; route them
-        through search() or compact them into a doc layout first."""
-        from searchengine_spark.operators.wand import wand_topk_batch
+        union — postings decoded once per slice-shard for ALL queries;
+        idf from the warm merged-stats cache). Term-layout slices are a
+        per-query path; route them through search() or compact them into
+        a doc layout first."""
+        from searchengine_spark.operators.wand import query_qf, wand_topk_batch
 
         term_only = [e.index_dir for e in self.engines
                      if e.doc_segments is None]
@@ -368,11 +334,12 @@ class FederatedEngine:
                 f"{term_only}")
         dead = frozenset().union(*[e.tombstones() for e in self.engines])
         unioned = _federated_segments(
-            [(e.index_dir, e.doc_segments) for e in self.engines],
-            [e.scalars for e in self.engines], self.scalars)
+            [(e.index_dir, e.doc_segments) for e in self.engines])
+        terms = {t for _, q in queries for t in query_qf(q)}
         return wand_topk_batch(unioned, queries, self.stats,
                                self.scalars.n_docs, self.scalars.avgdl,
-                               k=k, exclude=dead or None)
+                               k=k, exclude=dead or None,
+                               idf_map=self._idf_for(terms))
 
     def fetch(self, doc_ids: list[int]) -> DataFrame:
         """Doc-store lookup across slices (ids are globally unique, so

@@ -15,7 +15,7 @@ layouts, one encoder:
    sort-merge (operators/merge.py).
 2. **Doc-sharded** (``build_doc_segments``) — the query layout: shard =
    doc_id // shard_size (range sharding keeps delta gaps small). Every
-   shard holds ALL terms for its doc range, so block-max WAND runs locally
+   shard holds ALL terms for its doc range, so the top-k scorer runs locally
    per shard with zero cross-shard traffic; global top-k = merge of local
    top-ks (operators/wand.py). This is the classic document-partitioned
    web-search architecture, expressed as groupBy(shard).applyInPandas.
@@ -23,8 +23,10 @@ layouts, one encoder:
 Segment row payload (both layouts): docIDs ascending, stored as delta gaps
 + varint; tfs and dls varint (functions/codec.py) so a segment alone +
 (df, N, avgdl) suffices for exact BM25. Block metadata every BLOCK postings
-carries the last docID and the exact max BM25 qf=1 weight in the block —
-the admissible bound block-max WAND prunes on.
+carries the last docID and the exact max idf-free BM25 core in the block
+(``block_max_core``). The dense per-shard scorer (operators/wand.py) reads
+no block metadata; the column stays in the format until a format change
+drops it.
 """
 
 from __future__ import annotations

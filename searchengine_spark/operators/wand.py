@@ -1,33 +1,39 @@
-"""Block-max WAND top-k retrieval over doc-sharded segments.
+"""Dense per-shard BM25 top-k over doc-sharded segments.
 
 Reference query path: OR-union of per-term posting lists with additive
 scoring, full materialized score map, then sort (SearchEngine
 Engine/Engine/Engine.cs:125-183). No pruning beyond a static per-term
 1000-posting cap.
 
-This module is the north-star upgrade: **document-at-a-time WAND with
-block-max pruning and a bounded min-heap** (Broder et al. 2003; Ding &
-Suel 2011 block-max variant), run embarrassingly parallel per doc shard:
+Here the same union runs embarrassingly parallel per doc shard, and each
+shard is scored by one numpy kernel (``_dense_topk``):
 
     doc_segments.filter(term IN query)        [partition-pruned scan]
-      -> groupBy(shard).applyInPandas(wand)   [local top-k per shard]
+      -> groupBy(shard).applyInPandas(kernel) [local top-k per shard]
       -> orderBy(score desc, doc_id).limit(k) [tiny global merge]
 
 Every shard owns a disjoint doc range and ALL query terms' postings for it
 (segments layout, operators/segments.py), so no cross-shard traffic until
-the final k-row merge — the plan scales linearly in shards.
+the final k-row merge. A shard spans a bounded doc range (DOCS_PER_SHARD
+by default), so the kernel keeps a float64 accumulator and a hit mask over
+that span, adds every posting row's BM25 weights at ``docs - lo`` in the
+canonical (term, first doc) row order, masks tombstones and selects the
+top k with ``np.partition`` + ``np.lexsort``. Array code over the whole
+union replaces per-posting cursor moves (the vectorized-execution argument
+of the columnar inverted index and vectorized Python UDF papers in
+PAPERS.md); the module names (``wand_topk`` ...) are kept as the public
+API of the serving path.
 
 Correctness contract: identical (doc_id, score) top-k as the exhaustive
 relational scorer (operators/topk.py score_topk) under tie-break
-(score desc, doc_id asc); enforced by an adversarial agreement test. To
-keep ties exact the pruning threshold uses strict inequality and a 1e-12
-slack, so borderline docs are scored rather than skipped.
+(score desc, doc_id asc); enforced by agreement tests and a property test
+of the kernel against a brute-force sort.
 """
 
 from __future__ import annotations
 
-import heapq
 from collections import Counter
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -39,9 +45,12 @@ from searchengine_spark.functions.bitmap import DocIdBitmap
 from searchengine_spark.functions.scoring import B as BM25_B
 from searchengine_spark.functions.scoring import K1 as BM25_K1
 from searchengine_spark.functions.tokenize import tokenize_py
-from searchengine_spark.operators.segments import BLOCK, decode_payload, idf_np
+from searchengine_spark.operators.segments import decode_payload, idf_np
 
-_EPS = 1e-12
+#: widest doc span scored with a dense accumulator regardless of how few
+#: postings hit it (32 MB of float64); wider, sparser groups (a term-layout
+#: range group of a very large corpus) are scored over their distinct docs
+_DENSE_SPAN = 1 << 22
 
 
 def _exclude_broadcast(spark, exclude):
@@ -71,220 +80,141 @@ _TOPK_SCHEMA = T.StructType(
 )
 
 
-class _Postings:
-    """One decoded posting list (shared, position-free) — decoded ONCE per
-    shard even when many queries hit the same term (batch mode)."""
+class _Postings(NamedTuple):
+    """One decoded posting row (position-free): docs ascending."""
 
-    __slots__ = ("term", "docs", "tfs", "dls", "bmax", "n")
-
-    def __init__(self, row):
-        self.term = row.term
-        self.docs, self.tfs, self.dls = decode_payload(row)
-        self.docs = self.docs.astype(np.int64)
-        self.bmax = row.block_max_core
-        self.n = int(row.n)
+    term: str
+    docs: np.ndarray
+    tfs: np.ndarray
+    dls: np.ndarray
 
     @classmethod
-    def from_arrays(cls, term: str, docs: np.ndarray, tfs: np.ndarray,
-                    dls: np.ndarray, avgdl: float) -> "_Postings":
-        """Build from already-decoded arrays (the doc-range re-split of
-        the term layout), recomputing block maxes on the slice with the
-        same idf-free core the encoder uses (segments.bm25_core_np) —
-        maxima over a sub-slice are still admissible upper bounds."""
-        from searchengine_spark.operators.segments import bm25_core_np
-
-        p = object.__new__(cls)
-        p.term = term
-        p.docs = docs.astype(np.int64)
-        p.tfs = tfs
-        p.dls = dls
-        p.n = int(len(docs))
-        if p.n:
-            core = bm25_core_np(tfs.astype(np.float64),
-                                dls.astype(np.float64), avgdl)
-            p.bmax = np.maximum.reduceat(core, np.arange(0, p.n, BLOCK))
-        else:
-            p.bmax = np.zeros(0, dtype=np.float64)
-        return p
+    def decode(cls, row) -> "_Postings":
+        docs, tfs, dls = decode_payload(row)
+        return cls(row.term, docs.astype(np.int64), tfs, dls)
 
 
-class _Cursor:
-    """A moving position over a shared _Postings, weighted by (qf, idf)."""
+def _canonical(postings: list[_Postings]) -> list[_Postings]:
+    """Total order for a group's posting rows: (term, first doc).
 
-    __slots__ = ("docs", "tfs", "dls", "bmax", "qf", "idf", "pos", "n", "ub")
-
-    def __init__(self, p: _Postings, qf: float, idf: float):
-        self.docs = p.docs
-        self.tfs = p.tfs
-        self.dls = p.dls
-        self.bmax = p.bmax
-        self.qf = qf
-        self.idf = idf
-        self.pos = 0
-        self.n = p.n
-        # list-wide upper bound: qf * idf * max idf-free block core
-        self.ub = qf * idf * (max(self.bmax) if len(self.bmax) else 0.0)
-
-    def cur_doc(self) -> int:
-        return int(self.docs[self.pos]) if self.pos < self.n else -1
-
-    def seek(self, target: int) -> None:
-        """Advance to the first doc >= target (galloping via searchsorted)."""
-        if self.pos < self.n and self.docs[self.pos] < target:
-            self.pos += int(
-                np.searchsorted(self.docs[self.pos:], target, side="left")
-            )
-
-    def block_ub(self) -> float:
-        """qf * idf * block-max core of the current block — admissible
-        because the current doc lies inside this block."""
-        return self.qf * self.idf * self.bmax[self.pos // BLOCK]
-
-    def score_at(self, avgdl: float) -> float:
-        tf = float(self.tfs[self.pos])
-        dl = float(self.dls[self.pos])
-        w = self.idf * tf * (BM25_K1 + 1.0) / (
-            tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
-        )
-        return self.qf * w
+    The input order is the grouped-map row order — shuffle ARRIVAL
+    order, which multi-executor clusters randomize per call. Row order
+    is the float summation order of a doc's score, and mathematically
+    tied scores (duplicate turns) pick up last-bit differences that flip
+    their rank under (score desc, doc_id asc): measured on a 2-vs-8-
+    executor standalone cluster, the same 160-query batch hashed
+    differently on every call until rows were sorted. (term, first doc)
+    is a total order here: salted or range-split rows of one term are
+    doc-disjoint slices."""
+    return sorted(postings,
+                  key=lambda p: (p.term, int(p.docs[0]) if len(p.docs) else -1))
 
 
-def _canonical_postings(postings: list[_Postings]) -> list[_Postings]:
-    """Total order for a shard's posting rows: (term, first doc).
-    Salted / range-split rows of one term are doc-disjoint slices, so
-    the pair is unique. See _wand_shard's docstring for why this
-    matters (shuffle-arrival nondeterminism on real clusters)."""
-    return sorted(
-        postings,
-        key=lambda p: (p.term, int(p.docs[0]) if p.n else -1),
+def _weights(p: _Postings, idf: float, avgdl: float) -> np.ndarray:
+    """BM25 weight (qf = 1) of every posting in ``p``, in the float
+    association every scorer of this module has used, so scores are
+    bit-identical to the per-posting formula."""
+    tf = p.tfs.astype(np.float64)
+    dl = p.dls.astype(np.float64)
+    return idf * tf * (BM25_K1 + 1.0) / (
+        tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
     )
 
 
-def _wand_shard(
+def _dense_topk(
+    rows: list[tuple[np.ndarray, np.ndarray]], k: int,
+    exclude: DocIdBitmap | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k (doc_ids, scores) of the additive union of ``rows`` — each a
+    (docs, contributions) pair with docs unique within the row — under
+    (score desc, doc_id asc), tombstoned docs masked.
+
+    A doc's score sums its contributions in ``rows`` order starting from
+    0.0, so callers pass rows canonically ordered (``_canonical``). Ties
+    at the k-th score are all kept through the partition, so the doc_id
+    tie-break is exact."""
+    rows = [(d, c) for d, c in rows if len(d)]
+    if not rows or k <= 0:
+        return np.zeros(0, np.int64), np.zeros(0, np.float64)
+    lo = min(int(d[0]) for d, _ in rows)
+    hi = max(int(d[-1]) for d, _ in rows)
+    total = sum(len(d) for d, _ in rows)
+    if hi - lo < max(_DENSE_SPAN, 4 * total):
+        space = None
+        acc = np.zeros(hi - lo + 1, np.float64)
+    else:
+        space = np.unique(np.concatenate([d for d, _ in rows]))
+        acc = np.zeros(len(space), np.float64)
+    hit = np.zeros(len(acc), bool)
+    for d, c in rows:
+        i = d - lo if space is None else np.searchsorted(space, d)
+        acc[i] += c
+        hit[i] = True
+    idx = np.flatnonzero(hit)
+    docs = idx + lo if space is None else space[idx]
+    if exclude is not None:
+        live = ~exclude.mask(docs)
+        idx, docs = idx[live], docs[live]
+    scores = acc[idx]
+    if len(scores) > k:
+        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
+        keep = scores >= kth
+        docs, scores = docs[keep], scores[keep]
+    order = np.lexsort((docs, -scores))[:k]
+    return docs[order], scores[order]
+
+
+def _score_group(
     postings: list[_Postings], qf_map: dict[str, float],
     idf_map: dict[str, float], avgdl: float, k: int,
-    stats: dict | None = None,
-    exclude: frozenset | None = None,
-    presorted: bool = False,
-) -> list[tuple[int, float]]:
-    """Run block-max WAND over one shard's posting lists -> local top-k.
+    exclude: DocIdBitmap | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """One group's (shard's) local top-k for one query."""
+    rows = [(p.docs, qf_map[p.term] * _weights(p, idf_map[p.term], avgdl))
+            for p in _canonical(postings) if p.term in qf_map]
+    return _dense_topk(rows, k, exclude)
 
-    Heap entries are (score, -doc_id) so heap[0] is the weakest under the
-    pinned tie-break (score desc, doc_id asc): equal scores keep the
-    smaller doc_id, because (s, -d_small) > (s, -d_big).
 
-    Postings are CANONICALIZED by (term, first doc) before cursors are
-    built. The input list order is the grouped-map row order — shuffle
-    ARRIVAL order, which multi-executor clusters randomize per call
-    (single-JVM local mode happens to fetch deterministically, which
-    hid this). Cursor order decides (a) float summation order at a
-    scored pivot — mathematically-tied scores (duplicate turns) pick up
-    last-bit jitter that flips their raw-score rank under the
-    (score desc, doc_id asc) window, and (b) which true-tie survives
-    the per-shard k-cap. Measured on a 2-vs-8-executor standalone
-    cluster: the same 160-query batch hashed differently on EVERY call
-    until this sort. (term, first-doc) is a total order here: salted or
-    range-split rows of one term are doc-disjoint slices.
-
-    ``presorted=True`` skips the sort — the batch path canonicalizes a
-    shard's postings ONCE and reuses them for every query in the batch,
-    instead of re-sorting per query.
-    """
-    if not presorted:
-        postings = _canonical_postings(postings)
-    cursors = [
-        _Cursor(p, qf_map[p.term], idf_map[p.term])
-        for p in postings
-        if p.term in qf_map
-    ]
-    cursors = [c for c in cursors if c.n > 0]
-    if stats is not None:
-        stats["candidates"] = sum(c.n for c in cursors)
-        stats.setdefault("scored", 0)
-        stats.setdefault("block_skipped", 0)
-    if not cursors:
-        return []
-
-    heap: list[tuple[float, int]] = []  # (score, -doc_id), size <= k
-
-    def threshold() -> float:
-        return heap[0][0] if len(heap) == k else -np.inf
-
-    while True:
-        live = [c for c in cursors if c.pos < c.n]
-        if not live:
-            break
-        live.sort(key=lambda c: c.docs[c.pos])
-        # WAND pivot: smallest prefix whose summed list-UBs could reach
-        # theta (>= theta - eps keeps exact score-ties alive so the
-        # doc_id-asc tie-break stays identical to the exhaustive scorer).
-        theta = threshold()
-        acc = 0.0
-        pivot_i = -1
-        for i, c in enumerate(live):
-            acc += c.ub
-            if acc >= theta - _EPS:
-                pivot_i = i
-                break
-        if pivot_i == -1:
-            break  # no combination of remaining lists can reach theta
-        pivot_doc = int(live[pivot_i].docs[live[pivot_i].pos])
-
-        if int(live[0].docs[live[0].pos]) == pivot_doc:
-            # Cursors sorted by doc: everything on pivot_doc is a prefix
-            # run. Block-max refinement: admissible because each cursor's
-            # current doc lies inside its current block.
-            on_pivot = [c for c in live if int(c.docs[c.pos]) == pivot_doc]
-            if exclude and pivot_doc in exclude:
-                # tombstone mask: never scored, never enters the heap;
-                # upper bounds untouched so pruning stays admissible
-                for c in on_pivot:
-                    c.pos += 1
-                continue
-            block_acc = sum(c.block_ub() for c in on_pivot)
-            if block_acc >= theta - _EPS:
-                if stats is not None:
-                    stats["scored"] += 1
-                score = sum(c.score_at(avgdl) for c in on_pivot)
-                entry = (score, -pivot_doc)
-                if len(heap) < k:
-                    heapq.heappush(heap, entry)
-                elif entry > heap[0]:
-                    heapq.heapreplace(heap, entry)
-            else:
-                if stats is not None:
-                    stats["block_skipped"] += 1
-            for c in on_pivot:
-                c.pos += 1
-        else:
-            # advance all pre-pivot cursors to pivot_doc
-            for c in live[:pivot_i]:
-                c.seek(pivot_doc)
-
-    out = [(-d, s) for s, d in heap]
-    out.sort(key=lambda x: (-x[1], x[0]))
-    return out
+def _topk_frame(docs: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
+    return pd.DataFrame({"doc_id": pd.Series(docs, dtype="int64"),
+                         "score": pd.Series(scores, dtype="float64")})
 
 
 def query_qf(query: str) -> dict[str, float]:
     return {t: float(c) for t, c in Counter(tokenize_py(query)).items()}
 
 
+def _lookup_idf(term_stats: DataFrame, terms, n_docs: int,
+                idf_map: dict[str, float] | None = None) -> dict[str, float]:
+    """idf of each in-vocabulary term of ``terms``. ``idf_map`` is a
+    caller's precomputed (warm-cache) map: it is filtered to ``terms``
+    and no Spark job runs; terms absent from it count as out of
+    vocabulary. Without it, one tiny term_stats lookup job."""
+    terms = set(terms)
+    if idf_map is not None:
+        return {t: v for t, v in idf_map.items() if t in terms}
+    if not terms:
+        return {}
+    rows = (term_stats.filter(F.col("term").isin(sorted(terms)))
+            .select("term", "df").collect())
+    return {r["term"]: idf_np(int(r["df"]), n_docs) for r in rows}
+
+
 def _spread_groups(df: DataFrame, key: str, n: int | None = None) -> DataFrame:
     """Pre-partition a grouped-map input by its key with an EXPLICIT
     partition count. Rationale: the posting slices a query touches are
     small in BYTES (a few MB for frequent terms) but heavy in CPU (the
-    Python WAND kernel), so AQE's byte-based shuffle coalescing merges
-    them into a handful of tasks and serializes the kernel — measured on
-    the 333k-turn scaling corpus: the shard groups coalesced to 4 tasks,
-    2.9 s of kernel per task, 2→8-core query scaling capped at ~0.4. An
-    explicit numPartitions makes this shuffle REPARTITION_BY_NUM, which
-    AQE never coalesces, and the downstream groupBy reuses the
-    partitioning (no second exchange). The default 4x parallelism gives
-    multiple waves of hash-balanced shard groups at any cluster width;
-    empty partitions cost microseconds. Pass ``n`` for a width-
-    INDEPENDENT count (the scaling bench does: identical physical plan
-    at N and 4N cores, the build record's determinism discipline)."""
+    Python decode and scoring kernel), so AQE's byte-based shuffle
+    coalescing merges them into a handful of tasks and serializes the
+    kernel — measured on the 333k-turn scaling corpus: the shard groups
+    coalesced to 4 tasks, 2.9 s of kernel per task, 2→8-core query
+    scaling capped at ~0.4. An explicit numPartitions makes this shuffle
+    REPARTITION_BY_NUM, which AQE never coalesces, and the downstream
+    groupBy reuses the partitioning (no second exchange). The default 4x
+    parallelism gives multiple waves of hash-balanced shard groups at any
+    cluster width; empty partitions cost microseconds. Pass ``n`` for a
+    width-INDEPENDENT count (the scaling bench does: identical physical
+    plan at N and 4N cores, the build record's determinism discipline)."""
     n = n or df.sparkSession.sparkContext.defaultParallelism * 4
     return df.repartition(n, key)
 
@@ -300,14 +230,14 @@ def wand_topk(
     spread: int | None = None,
     idf_map: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Top-k BM25 over doc-sharded segments with block-max WAND pruning.
+    """Top-k BM25 over doc-sharded segments, one dense kernel per shard.
 
     Plan: tiny stats lookup for the query terms (idf) -> pruned segment
-    scan (term IN query terms) -> per-shard grouped-map WAND -> global
+    scan (term IN query terms) -> per-shard grouped-map scorer -> global
     TakeOrderedAndProject over <= shards*k rows.
 
     ``exclude``: tombstoned GLOBAL doc_ids masked inside the kernel
-    before scoring (operators/deletes.py) — a set/iterable, a DataFrame
+    before selection (operators/deletes.py) — a set/iterable, a DataFrame
     of ids, or a prebuilt DocIdBitmap; always shipped as a broadcast
     packed bitmap (functions/bitmap.py), never in the task closure.
 
@@ -315,37 +245,19 @@ def wand_topk(
     stats cache) — skips the per-query term_stats lookup action; terms
     absent from the map are treated as out-of-vocabulary.
     """
-    bcast = _exclude_broadcast(doc_segments.sparkSession, exclude)
+    spark = doc_segments.sparkSession
     qf_map = query_qf(query)
-    if not qf_map:
-        spark = doc_segments.sparkSession
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-
-    if idf_map is None:
-        df_rows = (
-            term_stats.filter(F.col("term").isin(list(qf_map)))
-            .select("term", "df")
-            .collect()
-        )
-        idf_map = {r["term"]: idf_np(int(r["df"]), n_docs)
-                   for r in df_rows}
-    else:
-        idf_map = {t: v for t, v in idf_map.items() if t in qf_map}
-    matched = doc_segments.filter(F.col("term").isin(list(idf_map)))
+    idf_map = _lookup_idf(term_stats, qf_map, n_docs, idf_map)
     if not idf_map:
-        spark = doc_segments.sparkSession
         return spark.createDataFrame([], _TOPK_SCHEMA)
+    bcast = _exclude_broadcast(spark, exclude)
+    matched = doc_segments.filter(F.col("term").isin(list(idf_map)))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        postings = [_Postings(r) for r in pdf.itertuples(index=False)]
-        top = _wand_shard(postings, qf_map, idf_map, avgdl, k,
-                          exclude=bcast.value if bcast else None)
-        if not top:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
+        postings = [_Postings.decode(r) for r in pdf.itertuples(index=False)]
+        return _topk_frame(*_score_group(
+            postings, qf_map, idf_map, avgdl, k,
+            exclude=bcast.value if bcast else None))
 
     local = _spread_groups(matched, "shard", spread).groupBy("shard") \
         .applyInPandas(run, _TOPK_SCHEMA)
@@ -375,45 +287,33 @@ def wand_topk_terms(
     idf_map: dict[str, float] | None = None,
 ) -> DataFrame:
     """Top-k BM25 over the TERM-partitioned layout (the merged /
-    incremental index, operators/merge.py) with block-max WAND.
+    incremental index, operators/merge.py) with the same dense kernel.
 
     Term partitioning co-locates each posting list whole, so a query
     touches exactly its terms' (term, salt) rows — a partition-pruned
-    scan of a handful of rows. Running WAND over them in one grouped-map
-    task (round 2's shape) put a single-task ceiling on every query, so
-    the plan now re-shards BY DOC RANGE first:
+    scan of a handful of rows. Scoring them in one grouped-map task
+    (round 2's shape) put a single-task ceiling on every query, so the
+    plan re-shards BY DOC RANGE first:
 
       matched rows -> mapInPandas decode + searchsorted split into
       ``n_groups`` contiguous doc ranges (docs are delta-encoded sorted,
       so a split is two array slices) -> groupBy(range).applyInPandas
-      full WAND per range -> k-merge.
+      kernel per range -> k-merge.
 
     Every range group holds ALL query terms' postings for a disjoint doc
-    slice (exactly the doc-sharded invariant), so per-group WAND top-k +
-    global k-merge is rank-identical to the one-task run; block maxes
-    are recomputed per slice (still admissible). Cost: one extra shuffle
-    of the QUERY terms' postings only — never the corpus — in exchange
-    for grouped-stage parallelism that scales with cluster width.
-    Salted rows of a hot term are doc-disjoint slices, so one cursor per
-    (row x range) double-counts nothing.
+    slice (exactly the doc-sharded invariant), so per-group top-k +
+    global k-merge is rank-identical to the one-task run. Cost: one
+    extra shuffle of the QUERY terms' postings only — never the corpus —
+    in exchange for grouped-stage parallelism that scales with cluster
+    width. Salted rows of a hot term are doc-disjoint slices, so one row
+    per (salt x range) double-counts nothing.
     """
-    bcast = _exclude_broadcast(term_segments.sparkSession, exclude)
-    qf_map = query_qf(query)
     spark = term_segments.sparkSession
-    if not qf_map:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    if idf_map is None:
-        df_rows = (
-            term_stats.filter(F.col("term").isin(list(qf_map)))
-            .select("term", "df")
-            .collect()
-        )
-        idf_map = {r["term"]: idf_np(int(r["df"]), n_docs)
-                   for r in df_rows}
-    else:
-        idf_map = {t: v for t, v in idf_map.items() if t in qf_map}
+    qf_map = query_qf(query)
+    idf_map = _lookup_idf(term_stats, qf_map, n_docs, idf_map)
     if not idf_map:
         return spark.createDataFrame([], _TOPK_SCHEMA)
+    bcast = _exclude_broadcast(spark, exclude)
     matched = term_segments.filter(F.col("term").isin(list(idf_map)))
 
     if n_groups is None:
@@ -456,82 +356,17 @@ def wand_topk_terms(
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         postings = [
-            _Postings.from_arrays(
-                r.term,
-                np.asarray(r.docs, dtype=np.int64),
-                np.asarray(r.tfs, dtype=np.int64),
-                np.asarray(r.dls, dtype=np.int64),
-                avgdl,
-            )
+            _Postings(r.term, np.asarray(r.docs, dtype=np.int64),
+                      np.asarray(r.tfs, dtype=np.int64),
+                      np.asarray(r.dls, dtype=np.int64))
             for r in pdf.itertuples(index=False)
         ]
-        top = _wand_shard(postings, qf_map, idf_map, avgdl, k,
-                          exclude=bcast.value if bcast else None)
-        if not top:
-            return pd.DataFrame({"doc_id": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-        return pd.DataFrame(
-            {"doc_id": [d for d, _ in top], "score": [s for _, s in top]}
-        )
+        return _topk_frame(*_score_group(
+            postings, qf_map, idf_map, avgdl, k,
+            exclude=bcast.value if bcast else None))
 
     local = parts.groupBy("g").applyInPandas(run, _TOPK_SCHEMA)
     return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-_WAND_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("shard", T.IntegerType(), False),
-        T.StructField("candidates", T.LongType(), False),
-        T.StructField("scored", T.LongType(), False),
-        T.StructField("block_skipped", T.LongType(), False),
-    ]
-)
-
-
-def wand_pruning_stats(
-    doc_segments: DataFrame,
-    query: str,
-    term_stats: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    k: int = 10,
-) -> dict:
-    """Run block-max WAND and return aggregate pruning counters:
-    ``candidates`` (postings in the matched lists), ``scored`` (pivot docs
-    fully scored), ``block_skipped`` (pivots rejected by the block-max
-    refinement). scored/candidates is the fraction of the OR-union the
-    heap actually evaluated — the effectiveness number block-max WAND
-    exists for (Ding & Suel 2011), tracked per round in the bench."""
-    qf_map = query_qf(query)
-    if not qf_map:
-        return {"candidates": 0, "scored": 0, "block_skipped": 0}
-    df_rows = (
-        term_stats.filter(F.col("term").isin(list(qf_map)))
-        .select("term", "df")
-        .collect()
-    )
-    idf_map = {r["term"]: idf_np(int(r["df"]), n_docs) for r in df_rows}
-    if not idf_map:
-        return {"candidates": 0, "scored": 0, "block_skipped": 0}
-    matched = doc_segments.filter(F.col("term").isin(list(idf_map)))
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        postings = [_Postings(r) for r in pdf.itertuples(index=False)]
-        stats: dict = {}
-        _wand_shard(postings, qf_map, idf_map, avgdl, k, stats=stats)
-        return pd.DataFrame(
-            {"shard": [int(pdf["shard"].iloc[0])],
-             "candidates": [int(stats.get("candidates", 0))],
-             "scored": [int(stats.get("scored", 0))],
-             "block_skipped": [int(stats.get("block_skipped", 0))]}
-        )
-
-    rows = matched.groupBy("shard").applyInPandas(run, _WAND_STATS_SCHEMA).collect()
-    return {
-        "candidates": sum(r["candidates"] for r in rows),
-        "scored": sum(r["scored"] for r in rows),
-        "block_skipped": sum(r["block_skipped"] for r in rows),
-    }
 
 
 _BATCH_TOPK_SCHEMA = T.StructType(
@@ -552,47 +387,44 @@ def wand_topk_batch(
     k: int = 10,
     exclude: set | frozenset | DataFrame | DocIdBitmap | None = None,
     spread: int | None = None,
+    idf_map: dict[str, float] | None = None,
 ) -> DataFrame:
-    """Many queries in one pass: per shard, posting lists are decoded ONCE
-    and every query runs block-max WAND over the shared decoded lists ->
-    (query_id, rank, doc_id, score). One segment scan + one shuffle-free
+    """Many queries in one pass -> (query_id, rank, doc_id, score). Per
+    shard, posting rows are decoded, put in canonical order and turned
+    into BM25 weight arrays ONCE; every query then runs the dense kernel
+    over the shared weights scaled by its qf. One segment scan + one
     grouped map for the whole query batch — the throughput path (the
-    reference serves one query per HTTP request; Engine.cs:45-95)."""
-    bcast = _exclude_broadcast(doc_segments.sparkSession, exclude)
+    reference serves one query per HTTP request; Engine.cs:45-95).
+    ``idf_map`` as in ``wand_topk``, over the batch's terms."""
+    spark = doc_segments.sparkSession
     qf_maps = {int(qid): query_qf(q) for qid, q in queries}
-    all_terms = sorted({t for m in qf_maps.values() for t in m})
-    if not all_terms:
-        return doc_segments.sparkSession.createDataFrame([], _BATCH_TOPK_SCHEMA)
-
-    df_rows = (
-        term_stats.filter(F.col("term").isin(all_terms))
-        .select("term", "df")
-        .collect()
-    )
-    idf_map = {r["term"]: idf_np(int(r["df"]), n_docs) for r in df_rows}
+    idf_map = _lookup_idf(term_stats, {t for m in qf_maps.values() for t in m},
+                         n_docs, idf_map)
+    if not idf_map:
+        return spark.createDataFrame(
+            [], "query_id int, rank int, doc_id long, score double")
+    bcast = _exclude_broadcast(spark, exclude)
     matched = doc_segments.filter(F.col("term").isin(list(idf_map)))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        # canonicalize ONCE per shard; every query in the batch reuses
-        # the sorted list (the per-query sort was 160x redundant work)
-        postings = _canonical_postings(
-            [_Postings(r) for r in pdf.itertuples(index=False)]
-        )
+        weighted = [
+            (p.term, p.docs, _weights(p, idf_map[p.term], avgdl))
+            for p in _canonical(
+                [_Postings.decode(r) for r in pdf.itertuples(index=False)])
+        ]
+        ex = bcast.value if bcast else None
         qids, docs, scores = [], [], []
         for qid, qf_map in qf_maps.items():
-            qf_known = {t: v for t, v in qf_map.items() if t in idf_map}
-            if not qf_known:
-                continue
-            for d, s in _wand_shard(postings, qf_known, idf_map, avgdl, k,
-                                    exclude=bcast.value if bcast else None,
-                                    presorted=True):
-                qids.append(qid)
-                docs.append(d)
-                scores.append(s)
+            d, s = _dense_topk(
+                [(dd, qf_map[t] * w) for t, dd, w in weighted if t in qf_map],
+                k, ex)
+            qids.append(np.full(len(d), qid, np.int32))
+            docs.append(d)
+            scores.append(s)
         return pd.DataFrame(
-            {"query_id": pd.Series(qids, dtype="int32"),
-             "doc_id": pd.Series(docs, dtype="int64"),
-             "score": pd.Series(scores, dtype="float64")}
+            {"query_id": pd.Series(np.concatenate(qids), dtype="int32"),
+             "doc_id": pd.Series(np.concatenate(docs), dtype="int64"),
+             "score": pd.Series(np.concatenate(scores), dtype="float64")}
         )
 
     local = _spread_groups(matched, "shard", spread).groupBy("shard") \

@@ -182,6 +182,23 @@ def test_auto_mode_picks_indexed_path_and_warms_cache(engine):
     assert a == b
 
 
+def test_search_batch_uses_warm_stats_cache(engine):
+    """search_batch takes idf from the same warm df cache as search():
+    a batch whose terms (OOV included) are all memoized runs with the
+    stats table removed, and returns the same rows."""
+    w = vocab()
+    qs = [(0, f"{w[0]} {w[3]}"), (1, f"{w[5]} zzznope {w[5]}")]
+    a = sorted(engine.search_batch(qs, k=5).collect())
+    assert a
+    saved = engine.term_stats
+    engine.term_stats = None  # any stats lookup would now crash
+    try:
+        b = sorted(engine.search_batch(qs, k=5).collect())
+    finally:
+        engine.term_stats = saved
+    assert a == b
+
+
 def test_auto_mode_falls_back_to_exhaustive(engine):
     """An index with no segment layout at all (doc store only) serves
     the relational exhaustive scorer under auto mode instead of raising

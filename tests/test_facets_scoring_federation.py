@@ -317,10 +317,8 @@ def test_engine_dis_max_vs_operator(spark, eng_idx, q2):
 def test_federated_wand_cross_slice_admissibility(built, q2):
     """Federated WAND over per-slice SEGMENT layouts == exhaustive
     global BM25, with slices deliberately split by document length so
-    the slices' baked avgdl diverges from the global one — the case
-    where uncorrected block maxima are inadmissible (a short-doc
-    slice's true cores GROW under the larger global avgdl). The
-    max(1, avgdl_g/avgdl_s) bound scaling must keep pruning exact."""
+    the slices' own avgdl diverges from the global one: every slice
+    must be scored with the global avgdl, not its own."""
     from searchengine_spark.operators.federation import (
         federated_wand_topk, merge_slice_scalars,
     )
@@ -342,7 +340,7 @@ def test_federated_wand_cross_slice_admissibility(built, q2):
         slice_stats.append(st_s)
         slice_scalars.append(sc_s)
     g = merge_slice_scalars(slice_scalars)
-    # the setup must actually exercise the inflation path
+    # the setup must actually make the slice and global avgdl differ
     assert g.avgdl / slice_scalars[0].avgdl > 1.001
     fed = federated_wand_topk(slice_segments, slice_stats, slice_scalars,
                               q2, k=10)
@@ -460,9 +458,9 @@ def test_federated_engine_streaming_slice_joins(spark, small, q2,
     STREAMING-built term-layout slice (incremental ingest with a
     doc_id_base -> compact -> export_for_serving) served together by
     one FederatedEngine, results == exhaustive global BM25 over the
-    union corpus. The term slice's block maxes are recomputed at query
-    time with the global avgdl (no inflation path), the doc slice's
-    are inflated — the routing must be invisible in the scores."""
+    union corpus. The doc slice runs the federated union and the term
+    slice wand_topk_terms, both with the merged stats — the routing
+    must be invisible in the scores."""
     from searchengine_spark.engine import SearchEngine
     from searchengine_spark.operators.federation import FederatedEngine
     from searchengine_spark.operators.forward import (

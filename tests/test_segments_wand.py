@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from searchengine_spark.build import build_index
@@ -189,44 +191,113 @@ def test_compression_ratio(index):
     assert enc / n < 8.0, f"{enc / n:.2f} B/posting (docs+tfs) vs 8 B raw"
 
 
-def test_wand_pruning_skips_work():
-    """Block-max WAND must fully score far fewer docs than the candidate
-    posting count on a selective query (the pruning claim of SURVEY §2.8 /
-    M4), while remaining exact (verified by the agreement tests above)."""
+def _brute_topk(rows, qf, idf, avgdl, k, dead=frozenset()):
+    """Per-doc Python-float BM25 in (term, first doc) row order, sorted
+    by (score desc, doc_id asc) — the reference the dense kernel must
+    reproduce bit for bit."""
+    from searchengine_spark.functions.scoring import B, K1
+
+    score: dict[int, float] = {}
+    for term, docs, tfs, dls in sorted(
+            rows, key=lambda r: (r[0], int(r[1][0]) if len(r[1]) else -1)):
+        for d, tf, dl in zip(docs.tolist(), tfs.tolist(), dls.tolist()):
+            tf, dl = float(tf), float(dl)
+            w = idf[term] * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+            score[d] = score.get(d, 0.0) + qf[term] * w
+    live = [(d, s) for d, s in score.items() if d not in dead]
+    return sorted(live, key=lambda x: (-x[1], x[0]))[:k]
+
+
+def test_dense_kernel_exact_on_hot_selective():
+    """A hot term in every doc (mostly tf=1, a few spikes) plus a
+    selective rare term, encoded and decoded through the real codec: the
+    dense kernel's top-k equals the per-doc brute-force sort exactly,
+    scores included, for a k inside and beyond the candidate count."""
     import pandas as pd
 
     from searchengine_spark.operators.segments import _encode_group_frame
-    from searchengine_spark.operators.wand import _Postings, _wand_shard
+    from searchengine_spark.operators.wand import _Postings, _score_group
 
     rng = np.random.default_rng(0)
     n_docs = 60_000
     avgdl = 30.0
-    rows = {}
     # hot term: every doc, mostly tf=1 with a few high-tf spikes
     tf_hot = np.ones(n_docs, np.int64)
     tf_hot[rng.integers(0, n_docs, 200)] = rng.integers(5, 30, 200)
     # selective term: 500 docs, varied tf
     sel_docs = np.sort(rng.choice(n_docs, 500, replace=False)).astype(np.int64)
     tf_sel = rng.integers(1, 20, 500).astype(np.int64)
+    dl = rng.integers(5, 60, n_docs).astype(np.int64)
     pdf = pd.DataFrame(
         {
             "term": ["hot", "sel"],
             "doc_arr": [np.arange(n_docs, dtype=np.int64), sel_docs],
             "tf_arr": [tf_hot, tf_sel],
-            "dl_arr": [np.full(n_docs, 30, np.int64), np.full(500, 30, np.int64)],
+            "dl_arr": [dl, dl[sel_docs]],
         }
     )
     encoded = _encode_group_frame(pdf, ["term"], avgdl)
-    postings = [_Postings(r) for r in encoded.itertuples(index=False)]
+    postings = [_Postings.decode(r) for r in encoded.itertuples(index=False)]
+    qf = {"hot": 1.0, "sel": 2.0}
     # idf: hot ~ stopword (low), sel ~ rare (high)
     idf = {"hot": 0.05, "sel": 5.0}
-    stats: dict = {}
-    top = _wand_shard(postings, {"hot": 1.0, "sel": 1.0}, idf, avgdl, 10,
-                      stats=stats)
-    assert len(top) == 10
-    assert stats["candidates"] == n_docs + 500
-    # pruning: the hot list is never exhaustively scored
-    assert stats["scored"] < stats["candidates"] * 0.05, stats
+    for k in (10, n_docs + 7):
+        docs, scores = _score_group(postings, qf, idf, avgdl, k)
+        got = list(zip(docs.tolist(), scores.tolist()))
+        assert got == _brute_topk(postings, qf, idf, avgdl, k)
+    assert len(got) == n_docs
+
+
+# doc ids: a dense run plus a few far ids, so some groups span more than
+# the dense-accumulator cap and take the distinct-docs path
+_POOL = list(range(24)) + [(1 << 23) + j for j in range(3)]
+
+
+@st.composite
+def _kernel_case(draw):
+    terms = draw(st.lists(st.sampled_from(["a", "b", "c"]), unique=True,
+                          max_size=3))
+    dl = {d: draw(st.integers(1, 4)) for d in _POOL}   # few values: ties
+    rows = []
+    for t in terms:
+        docs = sorted(draw(st.sets(st.sampled_from(_POOL), max_size=12)))
+        # doc-disjoint salted rows of one term: hash-like interleaving
+        n_salts = draw(st.integers(1, 3))
+        for salt in range(n_salts):
+            part = np.array([d for d in docs if d % n_salts == salt], np.int64)
+            tfs = np.array([draw(st.integers(1, 3)) for _ in part], np.int64)
+            rows.append((t, part, tfs,
+                         np.array([dl[d] for d in part.tolist()], np.int64)))
+    qf = {t: float(draw(st.integers(1, 3))) for t in terms}
+    idf = {t: draw(st.sampled_from([0.5, 1.25, 2.0])) for t in terms}
+    dead = frozenset(draw(st.sets(st.sampled_from(_POOL), max_size=6)))
+    k = draw(st.integers(1, len(_POOL) + 3))
+    perm = draw(st.permutations(range(len(rows))))
+    return rows, qf, idf, dead, k, perm
+
+
+@settings(max_examples=300, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(_kernel_case())
+def test_dense_kernel_matches_bruteforce(case):
+    """Property: the dense kernel equals a brute-force (score desc,
+    doc_id asc) sort bit for bit — duplicate docs with tied scores,
+    doc-disjoint salted rows of one term, qf > 1, tombstones, k beyond
+    the candidate count, empty groups — and a shuffled row arrival order
+    gives bit-identical output (the shuffle-arrival property)."""
+    from searchengine_spark.functions.bitmap import DocIdBitmap
+    from searchengine_spark.operators.wand import _Postings, _score_group
+
+    rows, qf, idf, dead, k, perm = case
+    avgdl = 2.5
+    postings = [_Postings(*r) for r in rows]
+    exclude = DocIdBitmap(dead) if dead else None
+    docs, scores = _score_group(postings, qf, idf, avgdl, k, exclude)
+    assert list(zip(docs.tolist(), scores.tolist())) == \
+        _brute_topk(rows, qf, idf, avgdl, k, dead)
+    d2, s2 = _score_group([postings[i] for i in perm], qf, idf, avgdl, k,
+                          exclude)
+    assert d2.tobytes() == docs.tobytes() and s2.tobytes() == scores.tobytes()
 
 
 def test_reference_query_set_batch_agreement(spark, index):
