@@ -336,6 +336,40 @@ def decode_payload(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return delta_decode(dec(row.doc_gaps)), dec(row.tfs), dec(row.dls)
 
 
+def decode_table(table) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Every row of a segment Arrow table (``n``, ``codec``, ``doc_gaps``,
+    ``tfs``, ``dls``) decoded at once -> (doc_ids int64, tfs, dls, starts):
+    row i's postings are ``[starts[i], starts[i + 1])``, values identical
+    to ``decode_payload`` row by row. Varint rows (the short-list
+    majority) decode as one concatenated blob per column — LEB128 is
+    self-delimiting, and the doc-gap prefix sum is re-based at every row
+    start; pack128 rows decode one by one."""
+    n = table.column("n").to_numpy().astype(np.int64)
+    starts = np.zeros(len(n) + 1, np.int64)
+    np.cumsum(n, out=starts[1:])
+    codecs = table.column("codec").to_pylist()
+    cols = {c: table.column(c).to_pylist() for c in ("doc_gaps", "tfs", "dls")}
+    docs, tfs, dls = (np.empty(starts[-1], np.uint64) for _ in range(3))
+    var = np.array([c in (None, "varint") for c in codecs], bool)
+    if var.any():
+        lens = n[var]
+        offs = np.zeros(len(lens) + 1, np.int64)
+        np.cumsum(lens, out=offs[1:])
+        pos = np.arange(offs[-1]) + np.repeat(starts[:-1][var] - offs[:-1], lens)
+        blob = {c: varint_decode(b"".join(v for v, ok in zip(vals, var) if ok))
+                for c, vals in cols.items()}
+        run = np.cumsum(blob["doc_gaps"], dtype=np.uint64)
+        before = np.concatenate(([np.uint64(0)], run))[offs[:-1]]
+        docs[pos] = run - np.repeat(before, lens)
+        tfs[pos], dls[pos] = blob["tfs"], blob["dls"]
+    for i in np.flatnonzero(~var):
+        dec = CODECS[codecs[i]][1]
+        s, e = starts[i], starts[i + 1]
+        docs[s:e] = delta_decode(dec(cols["doc_gaps"][i]))
+        tfs[s:e], dls[s:e] = dec(cols["tfs"][i]), dec(cols["dls"][i])
+    return docs.view(np.int64), tfs, dls, starts
+
+
 def segments_to_tf(segments: DataFrame) -> DataFrame:
     """Decode segments back to (term, doc_id, tf, dl) — the lossless
     round-trip check used by tests and the driver oracle gate."""

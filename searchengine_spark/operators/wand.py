@@ -24,6 +24,13 @@ of the columnar inverted index and vectorized Python UDF papers in
 PAPERS.md); the module names (``wand_topk`` ...) are kept as the public
 API of the serving path.
 
+An index whose postings fit a share of the driver's memory
+(``resident_index``) is served without Spark on the query path:
+``ResidentIndex`` decodes the segments once into driver-side arrays and
+feeds the same kernel the same per-shard rows, so results are
+bit-identical to the plans above; those stay the path for larger
+indexes.
+
 Correctness contract: identical (doc_id, score) top-k as the exhaustive
 relational scorer (operators/topk.py score_topk) under tie-break
 (score desc, doc_id asc); enforced by agreement tests and a property test
@@ -32,6 +39,7 @@ of the kernel against a brute-force sort.
 
 from __future__ import annotations
 
+import os
 from collections import Counter
 from typing import NamedTuple
 
@@ -45,7 +53,11 @@ from searchengine_spark.functions.bitmap import DocIdBitmap
 from searchengine_spark.functions.scoring import B as BM25_B
 from searchengine_spark.functions.scoring import K1 as BM25_K1
 from searchengine_spark.functions.tokenize import tokenize_py
-from searchengine_spark.operators.segments import decode_payload, idf_np
+from searchengine_spark.operators.segments import (
+    decode_payload,
+    decode_table,
+    idf_np,
+)
 
 #: widest doc span scored with a dense accumulator regardless of how few
 #: postings hit it (32 MB of float64); wider, sparser groups (a term-layout
@@ -53,13 +65,9 @@ from searchengine_spark.operators.segments import decode_payload, idf_np
 _DENSE_SPAN = 1 << 22
 
 
-def _exclude_broadcast(spark, exclude):
+def _exclude_bitmap(exclude) -> DocIdBitmap | None:
     """Normalize a tombstone set (set/frozenset/iterable, DataFrame of
-    ids, or prebuilt DocIdBitmap) into a broadcast DocIdBitmap.
-
-    The UDF closure then carries only the tiny Broadcast handle; the
-    bitmap itself ships once per executor via the broadcast mechanism —
-    never a corpus-sized Python object pickled into every task."""
+    ids, or prebuilt DocIdBitmap) into a DocIdBitmap; None when empty."""
     if exclude is None:
         return None
     if isinstance(exclude, DocIdBitmap):
@@ -68,9 +76,17 @@ def _exclude_broadcast(spark, exclude):
         bm = DocIdBitmap.from_dataframe(exclude)
     else:
         bm = DocIdBitmap(exclude)
-    if not bm:
-        return None
-    return spark.sparkContext.broadcast(bm)
+    return bm or None
+
+
+def _exclude_broadcast(spark, exclude):
+    """The tombstone bitmap (``_exclude_bitmap``) as a broadcast: the UDF
+    closure then carries only the tiny Broadcast handle; the bitmap
+    itself ships once per executor via the broadcast mechanism — never a
+    corpus-sized Python object pickled into every task."""
+    bm = _exclude_bitmap(exclude)
+    return spark.sparkContext.broadcast(bm) if bm is not None else None
+
 
 _TOPK_SCHEMA = T.StructType(
     [
@@ -173,6 +189,29 @@ def _score_group(
     rows = [(p.docs, qf_map[p.term] * _weights(p, idf_map[p.term], avgdl))
             for p in _canonical(postings) if p.term in qf_map]
     return _dense_topk(rows, k, exclude)
+
+
+def _score_group_batch(
+    postings: list[_Postings], qf_maps: dict[int, dict[str, float]],
+    idf_map: dict[str, float], avgdl: float, k: int,
+    exclude: DocIdBitmap | None = None,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """One group's local top-k for every query of a batch -> (query_ids,
+    doc_ids, scores). The group's rows are put in canonical order and
+    turned into BM25 weight arrays ONCE; every query then runs the dense
+    kernel over the shared weights scaled by its qf."""
+    weighted = [(p.term, p.docs, _weights(p, idf_map[p.term], avgdl))
+                for p in _canonical(postings)]
+    qids, docs, scores = [np.zeros(0, np.int32)], [np.zeros(0, np.int64)], \
+        [np.zeros(0, np.float64)]
+    for qid, qf_map in qf_maps.items():
+        d, s = _dense_topk(
+            [(dd, qf_map[t] * w) for t, dd, w in weighted if t in qf_map],
+            k, exclude)
+        qids.append(np.full(len(d), qid, np.int32))
+        docs.append(d)
+        scores.append(s)
+    return np.concatenate(qids), np.concatenate(docs), np.concatenate(scores)
 
 
 def _topk_frame(docs: np.ndarray, scores: np.ndarray) -> pd.DataFrame:
@@ -407,24 +446,13 @@ def wand_topk_batch(
     matched = doc_segments.filter(F.col("term").isin(list(idf_map)))
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        weighted = [
-            (p.term, p.docs, _weights(p, idf_map[p.term], avgdl))
-            for p in _canonical(
-                [_Postings.decode(r) for r in pdf.itertuples(index=False)])
-        ]
-        ex = bcast.value if bcast else None
-        qids, docs, scores = [], [], []
-        for qid, qf_map in qf_maps.items():
-            d, s = _dense_topk(
-                [(dd, qf_map[t] * w) for t, dd, w in weighted if t in qf_map],
-                k, ex)
-            qids.append(np.full(len(d), qid, np.int32))
-            docs.append(d)
-            scores.append(s)
+        qids, docs, scores = _score_group_batch(
+            [_Postings.decode(r) for r in pdf.itertuples(index=False)],
+            qf_maps, idf_map, avgdl, k, bcast.value if bcast else None)
         return pd.DataFrame(
-            {"query_id": pd.Series(np.concatenate(qids), dtype="int32"),
-             "doc_id": pd.Series(np.concatenate(docs), dtype="int64"),
-             "score": pd.Series(np.concatenate(scores), dtype="float64")}
+            {"query_id": pd.Series(qids, dtype="int32"),
+             "doc_id": pd.Series(docs, dtype="int64"),
+             "score": pd.Series(scores, dtype="float64")}
         )
 
     local = _spread_groups(matched, "shard", spread).groupBy("shard") \
@@ -435,3 +463,128 @@ def wand_topk_batch(
         .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )
+
+
+# ---------------------------------------------------------------------------
+# driver-resident backend
+# ---------------------------------------------------------------------------
+
+#: share of the driver's available physical memory a resident index may use
+_RESIDENT_SHARE = 0.25
+#: driver bytes per resident posting: the decoded int64 doc and uint64
+#: tf/dl arrays (24 B), plus the load's transient Arrow table and decode
+#: buffers
+_POSTING_BYTES = 64
+
+_BATCH_RESULT_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.IntegerType(), False),
+        T.StructField("rank", T.IntegerType(), False),
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("score", T.DoubleType(), False),
+    ]
+)
+
+
+def _budget_postings() -> int:
+    """Postings the driver may hold decoded: ``_RESIDENT_SHARE`` of the
+    physical memory the OS reports available, at ``_POSTING_BYTES`` each.
+    The one switch between the resident and the Spark path."""
+    avail = os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return int(avail * _RESIDENT_SHARE) // _POSTING_BYTES
+
+
+def resident_index(doc_segments: DataFrame, term_stats: DataFrame,
+                   n_docs: int, avgdl: float) -> "ResidentIndex | None":
+    """The doc-sharded index decoded into the driver when its postings
+    (``sum(df)`` of ``term_stats``, one tiny agg) fit ``_budget_postings``;
+    None when they do not, and ``wand_topk`` / ``wand_topk_batch`` serve."""
+    postings = term_stats.agg(F.sum("df")).first()[0] or 0
+    if postings > _budget_postings():
+        return None
+    return ResidentIndex(doc_segments, term_stats, n_docs, avgdl)
+
+
+class ResidentIndex:
+    """Doc-sharded segments decoded once into driver-side columnar arrays
+    — the reference Engine's load-into-RAM model (Engine.cs:32-96) for
+    an index that fits — scored by the same kernel as the Spark path.
+
+    Built with one ``toArrow()`` of ``doc_segments`` (any layout the
+    DataFrame reads, ``g=*`` groups included) and one of ``term_stats``:
+    rows sorted by (term, shard) share three posting arrays, a term maps
+    to its row span, and the df dict answers idf with no lookup job, out-
+    of-vocabulary terms included. A query gathers its terms' rows per
+    shard and runs ``_score_group`` (or ``_score_group_batch``) on exactly
+    the rows the Spark plan's grouped map would get, so (doc_id, score)
+    are bit-identical; the shards' top-ks merge under (score desc,
+    doc_id asc) in numpy and return as an Arrow-backed DataFrame: no
+    scan, exchange or Python worker on the query path (a traced perfbench
+    run counts 0 Spark jobs per warm query, collect included)."""
+
+    def __init__(self, doc_segments: DataFrame, term_stats: DataFrame,
+                 n_docs: int, avgdl: float):
+        self.spark = doc_segments.sparkSession
+        self.n_docs, self.avgdl = n_docs, avgdl
+        table = doc_segments.select(
+            "shard", "term", "n", "codec", "doc_gaps", "tfs", "dls",
+        ).toArrow().sort_by([("term", "ascending"), ("shard", "ascending")])
+        self.docs, self.tfs, self.dls, self.starts = decode_table(table)
+        self.shards = table.column("shard").to_numpy()
+        self.spans: dict[str, list[int]] = {}
+        for i, term in enumerate(table.column("term").to_pylist()):
+            self.spans.setdefault(term, [i, i])[1] = i + 1
+        stats = term_stats.select("term", "df").toArrow()
+        self.df = dict(zip(stats.column("term").to_pylist(),
+                           stats.column("df").to_pylist()))
+
+    def _idf(self, terms) -> dict[str, float]:
+        return {t: idf_np(self.df[t], self.n_docs)
+                for t in terms if self.df.get(t, 0) > 0}
+
+    def _groups(self, terms) -> list[list[_Postings]]:
+        """The posting rows of ``terms``, grouped by shard."""
+        groups: dict[int, list[_Postings]] = {}
+        for t in terms:
+            lo, hi = self.spans.get(t, (0, 0))
+            for r in range(lo, hi):
+                s, e = self.starts[r], self.starts[r + 1]
+                groups.setdefault(int(self.shards[r]), []).append(_Postings(
+                    t, self.docs[s:e], self.tfs[s:e], self.dls[s:e]))
+        return list(groups.values())
+
+    def topk(self, query: str, k: int = 10, exclude=None) -> DataFrame:
+        """``wand_topk`` over the resident arrays: (doc_id, score)."""
+        qf_map = query_qf(query)
+        idf_map = self._idf(qf_map)
+        ex = _exclude_bitmap(exclude)
+        parts = [_score_group(g, qf_map, idf_map, self.avgdl, k, ex)
+                 for g in self._groups(idf_map)]
+        docs = np.concatenate([np.zeros(0, np.int64), *(d for d, _ in parts)])
+        scores = np.concatenate([np.zeros(0), *(s for _, s in parts)])
+        order = np.lexsort((docs, -scores))[:k]
+        return self.spark.createDataFrame(
+            _topk_frame(docs[order], scores[order]), _TOPK_SCHEMA)
+
+    def topk_batch(self, queries: list[tuple[int, str]], k: int = 10,
+                   exclude=None) -> DataFrame:
+        """``wand_topk_batch`` over the resident arrays: (query_id, rank,
+        doc_id, score)."""
+        qf_maps = {int(qid): query_qf(q) for qid, q in queries}
+        idf_map = self._idf({t for m in qf_maps.values() for t in m})
+        ex = _exclude_bitmap(exclude)
+        parts = [_score_group_batch(g, qf_maps, idf_map, self.avgdl, k, ex)
+                 for g in self._groups(idf_map)]
+        qids, docs, scores = (
+            np.concatenate([np.zeros(0, dt), *(p[i] for p in parts)])
+            for i, dt in enumerate((np.int32, np.int64, np.float64)))
+        order = np.lexsort((docs, -scores, qids))
+        qids, docs, scores = qids[order], docs[order], scores[order]
+        rank = np.arange(len(qids)) - np.searchsorted(qids, qids) + 1
+        keep = rank <= k
+        return self.spark.createDataFrame(pd.DataFrame(
+            {"query_id": pd.Series(qids[keep], dtype="int32"),
+             "rank": pd.Series(rank[keep], dtype="int32"),
+             "doc_id": pd.Series(docs[keep], dtype="int64"),
+             "score": pd.Series(scores[keep], dtype="float64")}),
+            _BATCH_RESULT_SCHEMA)

@@ -85,11 +85,23 @@ def _write_scalars(out_dir: str, sc: dict) -> None:
 
 
 def read_manifest(out_dir: str) -> list[dict]:
+    """Manifest rows in append order. An unparseable FINAL line is a row
+    torn by a crash mid-append: it never committed anything, so it is
+    ignored (its stage re-runs); anywhere else it is corruption and
+    raises."""
     p = _manifest_path(out_dir)
     if not os.path.exists(p):
         return []
     with open(p) as f:
-        return [json.loads(line) for line in f if line.strip()]
+        lines = [line for line in f if line.strip()]
+    rows = []
+    for i, line in enumerate(lines):
+        try:
+            rows.append(json.loads(line))
+        except ValueError:
+            if i < len(lines) - 1:
+                raise
+    return rows
 
 
 def committed_stages(out_dir: str) -> set[str]:
@@ -99,7 +111,22 @@ def committed_stages(out_dir: str) -> set[str]:
 
 
 def _append_manifest(out_dir: str, row: dict) -> None:
-    with open(_manifest_path(out_dir), "a") as f:
+    """Append one row on a fresh line. An unterminated final line is a
+    crash mid-append: it is cut off if torn (what ``read_manifest``
+    ignores), or terminated if it parses, so the file stays one JSON row
+    a line."""
+    p = _manifest_path(out_dir)
+    if os.path.exists(p):
+        with open(p, "rb+") as f:
+            data = f.read()
+            if data and not data.endswith(b"\n"):
+                cut = data.rfind(b"\n") + 1
+                try:
+                    json.loads(data[cut:])
+                    f.write(b"\n")
+                except ValueError:
+                    f.truncate(cut)
+    with open(p, "a") as f:
         f.write(json.dumps(row) + "\n")
 
 

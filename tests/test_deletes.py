@@ -144,6 +144,40 @@ def test_batch_and_fetch_respect_tombstones(eng):
     assert eng.fetch(dead).count() == 0
 
 
+def test_resident_copy_never_stale(spark, small, tmp_path_factory):
+    """The driver-resident copy of the doc segments never serves a stale
+    index: (a) a delete made after the first query is honoured by the
+    next one, single and batch (tombstones are read per call, never baked
+    into the copy); (b) purge_deleted, which rewrites the segments and
+    clears tombstones.json, is followed by a rebuilt copy — the old
+    arrays still hold the purged docs, and with the mask gone they would
+    rank again."""
+    out = str(tmp_path_factory.mktemp("delidx_resident"))
+    run_build(spark, small, out, num_doc_partitions=3, layouts=("doc",),
+              n_shards=N_SHARDS)
+    eng = SearchEngine.load(spark, out)
+    before = _ranked(eng.search(QUERY, k=10))
+    assert eng.last_search_mode == "resident"
+    copy = eng._resident
+    dead = [d for d, _ in before[:3]]
+
+    eng.delete_docs(dead)
+    masked = _ranked(eng.search(QUERY, k=10))
+    assert eng.last_search_mode == "resident" and eng._resident is copy
+    assert not set(dead) & {d for d, _ in masked} and len(masked) == 10
+    assert masked == _ranked(eng.search(QUERY, k=10, mode="exhaustive"))
+    batch = eng.search_batch([(0, QUERY)], k=10).collect()
+    assert [(r.doc_id, round(r.score, 9))
+            for r in sorted(batch, key=lambda r: r.rank)] == masked
+
+    eng.purge_deleted(n_shards=N_SHARDS)
+    assert eng.tombstones() == frozenset()
+    assert _ranked(eng.search(QUERY, k=10)) == masked
+    assert eng.last_search_mode == "resident" and eng._resident is not copy
+    batch = eng.search_batch([(0, QUERY)], k=10).collect()
+    assert not set(dead) & {r.doc_id for r in batch}
+
+
 def test_compact_applies_tombstones(spark, small, tmp_path_factory):
     """Incremental-index compaction drops tombstoned docs during the
     merge (Lucene model): merged == merge-of-live-docs, and the dropped

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from searchengine_spark.engine import SearchEngine
+from searchengine_spark.operators import wand
 from searchengine_spark.pipeline import run_build
 from searchengine_spark.sources.synth import vocab
 
@@ -20,6 +21,18 @@ def engine(spark, small, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("engidx"))
     run_build(spark, small, out, num_doc_partitions=3, layouts=("doc",))
     return SearchEngine.load(spark, out)
+
+
+@pytest.fixture(scope="module")
+def spark_engine(spark, engine):
+    """The same index served by the Spark plan: the driver memory budget
+    is forced to zero while the engine makes its (cached) backend
+    choice."""
+    eng = SearchEngine.load(spark, engine.index_dir)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(wand, "_budget_postings", lambda: 0)
+        assert eng._resident_index() is None
+    return eng
 
 
 def _plan(df) -> str:
@@ -68,12 +81,12 @@ def test_reference_mode(engine):
 # plan hygiene
 # ---------------------------------------------------------------------------
 
-def test_wand_scan_pushes_term_filter(engine):
+def test_wand_scan_pushes_term_filter(spark_engine):
     """The query-term predicate must reach the segment parquet scan
     (PushedFilters: In(term, ...)) — the Spark analog of the reference's
     radix-directory point lookup (Engine.cs:100-122)."""
     w = vocab()
-    plan = _plan(engine.search(f"{w[0]} {w[1]}", k=5))
+    plan = _plan(spark_engine.search(f"{w[0]} {w[1]}", k=5))
     assert "PushedFilters" in plan
     assert "In(term" in plan.replace("term#", "term")
 
@@ -155,11 +168,13 @@ def test_facet_histogram_covers_hits(engine):
 # auto mode selection + warm stats cache (round 4)
 # ---------------------------------------------------------------------------
 
-def test_auto_mode_picks_indexed_path_and_warms_cache(engine):
+def test_auto_mode_picks_indexed_path_and_warms_cache(spark_engine):
     """search() with NO mode argument serves the doc-sharded WAND layout
     (ES-like default), records it in last_search_mode, and memoizes the
     query terms' df so the repeat query costs zero stats lookups — proven
-    the hard way: the stats table is removed and the repeat still runs."""
+    the hard way: the stats table is removed and the repeat still runs.
+    Spark backend (an index over the driver memory budget)."""
+    engine = spark_engine
     w = vocab()
     q = f"{w[0]} {w[3]} zzznope"
     first = engine.search(q, k=5)
@@ -182,10 +197,42 @@ def test_auto_mode_picks_indexed_path_and_warms_cache(engine):
     assert a == b
 
 
-def test_search_batch_uses_warm_stats_cache(engine):
+def test_auto_mode_serves_resident_without_stats(engine, spark_engine):
+    """The resident twin: an index that fits the driver memory budget is
+    scored in the driver (last_search_mode "resident"), its plan reads no
+    segment file and runs no grouped map, and its df dict answers idf —
+    with the stats table removed, never-seen out-of-vocabulary terms are
+    still served, single and batch. Results are bit-identical to the
+    Spark backend."""
+    w = vocab()
+    q = f"{w[0]} {w[3]} zzznope"
+    first = engine.search(q, k=5)
+    assert engine.last_search_mode == "resident"
+    plan = first._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan and "FileScan" not in plan
+    a = [(r.doc_id, r.score) for r in first.collect()]
+    assert a == [(r.doc_id, r.score)
+                 for r in spark_engine.search(q, k=5).collect()]
+    assert not engine._df_memo  # the resident path never fills it
+    saved = engine.term_stats
+    engine.term_stats = None  # any stats lookup would now crash
+    try:
+        b = [(r.doc_id, r.score)
+             for r in engine.search(f"{q} qqqneverseen", k=5).collect()]
+        batch = sorted(engine.search_batch(
+            [(0, q), (1, "qqqneverseen zzznope")], k=5).collect())
+    finally:
+        engine.term_stats = saved
+    assert a == b
+    assert [(r.doc_id, r.score) for r in batch if r.query_id == 0] == a
+    assert [r for r in batch if r.query_id == 1] == []
+
+
+def test_search_batch_uses_warm_stats_cache(spark_engine):
     """search_batch takes idf from the same warm df cache as search():
     a batch whose terms (OOV included) are all memoized runs with the
-    stats table removed, and returns the same rows."""
+    stats table removed, and returns the same rows. Spark backend."""
+    engine = spark_engine
     w = vocab()
     qs = [(0, f"{w[0]} {w[3]}"), (1, f"{w[5]} zzznope {w[5]}")]
     a = sorted(engine.search_batch(qs, k=5).collect())
@@ -206,6 +253,8 @@ def test_auto_mode_falls_back_to_exhaustive(engine):
     import dataclasses
 
     w = vocab()
+    engine.search(w[0], k=5)
+    assert engine.last_search_mode == "resident"  # a resident copy exists
     bare = dataclasses.replace(engine, doc_segments=None,
                                term_segments=None)
     got = [(r.doc_id, round(r.score, 9))

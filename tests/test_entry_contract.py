@@ -45,8 +45,7 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(by=list(pdf.columns)).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("name", SAMPLE)
-def test_sampled_oracle_match(spark, entry_mod, name):
+def _oracle_match(spark, entry_mod, name):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
@@ -55,3 +54,27 @@ def test_sampled_oracle_match(spark, entry_mod, name):
     assert list(got.columns) == list(want.columns)
     assert len(got) == len(want) > 0
     pd.testing.assert_frame_equal(got, want)
+
+
+@pytest.mark.parametrize("name", SAMPLE)
+def test_sampled_oracle_match(spark, entry_mod, name):
+    _oracle_match(spark, entry_mod, name)
+
+
+@pytest.mark.parametrize("backend", ["resident", "spark"])
+@pytest.mark.parametrize("name",
+                         ["wand_topk", "batch_wand_topk", "wand_topk_deletes"])
+def test_wand_entries_on_both_backends(spark, entry_mod, monkeypatch, name,
+                                       backend):
+    """The WAND registry entries match their DuckDB oracles whether the
+    segments are scored in the driver (resident) or by the Spark plan
+    (driver memory budget forced to zero)."""
+    from searchengine_spark.operators import wand
+
+    if backend == "spark":
+        monkeypatch.setattr(wand, "_budget_postings", lambda: 0)
+    real, picked = wand.resident_index, []
+    monkeypatch.setattr(wand, "resident_index",
+                        lambda *a: picked.append(real(*a)) or picked[-1])
+    _oracle_match(spark, entry_mod, name)
+    assert picked and (picked[-1] is None) == (backend == "spark")

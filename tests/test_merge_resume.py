@@ -114,6 +114,37 @@ def test_pipeline_resume(spark, small, tmp_path_factory):
     assert seg_rows and "skew_factor" in seg_rows[-1] and "postings" in seg_rows[-1]
 
 
+def test_resume_after_torn_manifest_line(spark, small, tmp_path_factory):
+    """Fault injection: a crash mid-append leaves the manifest's last row
+    torn mid-JSON. Resume must not raise: it ignores the torn row, redoes
+    that stage (and what follows it), appends on a fresh line, and
+    writes bit-identical segments."""
+    out = str(tmp_path_factory.mktemp("torn"))
+    run_build(spark, small, out, num_doc_partitions=3, layouts=("doc",))
+    before = sorted(map(repr, spark.read.parquet(
+        f"{out}/doc_segments.parquet").collect()))
+    # crash while committing doc_segments: its COMMITTED row is cut in
+    # the middle and nothing after it was written
+    path = f"{out}/manifest.jsonl"
+    with open(path) as f:
+        lines = f.readlines()
+    last = max(i for i, line in enumerate(lines)
+               if '"doc_segments"' in line and "COMMITTED" in line)
+    with open(path, "w") as f:
+        f.writelines(lines[:last])
+        f.write(lines[last][:len(lines[last]) // 2])
+    assert "doc_segments" not in _stage_names(out)
+
+    run_build(spark, small, out, num_doc_partitions=3, layouts=("doc",))
+    with open(path) as f:
+        rows = [json.loads(line) for line in f]  # every line parses again
+    assert [m["stage"] for m in rows if m["status"] == "COMMITTED"][-2:] == \
+        ["doc_segments", "term_stats"]
+    after = sorted(map(repr, spark.read.parquet(
+        f"{out}/doc_segments.parquet").collect()))
+    assert after == before
+
+
 # ---------------------------------------------------------------------------
 # determinism across partitioning (cluster-size proxy)
 # ---------------------------------------------------------------------------

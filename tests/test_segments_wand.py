@@ -11,6 +11,8 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from searchengine_spark.build import build_index
+from searchengine_spark.engine import SearchEngine
+from searchengine_spark.operators import wand
 from searchengine_spark.operators.segments import (
     BLOCK,
     bm25_core_np,
@@ -19,7 +21,6 @@ from searchengine_spark.operators.segments import (
     segments_to_tf,
 )
 from searchengine_spark.operators.topk import score_topk
-from searchengine_spark.operators.wand import wand_topk
 from searchengine_spark.sources.synth import vocab
 
 
@@ -32,6 +33,47 @@ def index(spark, small):
     idx.doc_segments.count()
     idx.term_segments.count()
     return idx
+
+
+@pytest.fixture(scope="module")
+def backends(spark, index, tmp_path_factory):
+    """The index served by both SearchEngine backends, keyed by the
+    ``last_search_mode`` each records: "resident" (decoded in the driver)
+    and "wand" (the Spark plan; the driver memory budget is forced to
+    zero while the engine makes its cached backend choice)."""
+    out = {}
+    for mode in ("resident", "wand"):
+        eng = SearchEngine(
+            spark=spark, index_dir=str(tmp_path_factory.mktemp(mode)),
+            doc_map=index.doc_map, term_stats=index.term_stats,
+            scalars=index.scalars, doc_segments=index.doc_segments)
+        with pytest.MonkeyPatch.context() as mp:
+            if mode == "wand":
+                mp.setattr(wand, "_budget_postings", lambda: 0)
+            assert (eng._resident_index() is None) == (mode == "wand")
+        out[mode] = eng
+    return out
+
+
+def _served(backends, query, k):
+    """(doc_id, score) rows of ``query`` from each backend; asserts each
+    backend served and that both return the same rows, float bits
+    included."""
+    got = {}
+    for mode, eng in backends.items():
+        got[mode] = [(r.doc_id, r.score) for r in eng.search(query, k=k).collect()]
+        assert eng.last_search_mode == mode
+    assert got["resident"] == got["wand"], query
+    return got["wand"]
+
+
+def _served_batch(backends, queries, k):
+    """Sorted (query_id, rank, doc_id, score) of a batch, equal across
+    both backends, float bits included."""
+    got = {mode: sorted(eng.search_batch(queries, k=k).collect())
+           for mode, eng in backends.items()}
+    assert got["resident"] == got["wand"]
+    return got["wand"]
 
 
 def _tf_set(df):
@@ -55,6 +97,24 @@ def test_doc_segments_roundtrip(index):
 
 def test_term_segments_roundtrip(index):
     assert _tf_set(segments_to_tf(index.term_segments)) == _tf_set(index.tf_table)
+
+
+def test_decode_table_equals_row_decode(index):
+    """The resident index's whole-table decode (one concatenated varint
+    blob per column, pack128 rows one by one) yields exactly
+    decode_payload's arrays for every row, both codecs present."""
+    from searchengine_spark.operators.segments import decode_table
+
+    table = index.doc_segments.toArrow()
+    docs, tfs, dls, starts = decode_table(table)
+    rows = table.to_pylist()
+    assert {r["codec"] for r in rows} == {"varint", "pack128"}
+    for i, r in enumerate(rows):
+        d, t, l = decode_payload(type("Row", (), r))
+        s, e = starts[i], starts[i + 1]
+        assert docs[s:e].tolist() == d.tolist() and tfs[s:e].tolist() == \
+            t.tolist() and dls[s:e].tolist() == l.tolist()
+    assert starts[-1] == sum(r["n"] for r in rows)
 
 
 def test_doc_shards_are_ranges(index):
@@ -133,46 +193,54 @@ def _queries():
     }
 
 
+# The agreement tests below run every query on both backends (resident
+# and Spark, ``backends``): each must match the exhaustive scorer, and
+# the two must return the same rows bit for bit.
+
 @pytest.mark.parametrize("case", QUERY_CASES)
-def test_wand_matches_exhaustive(index, case):
+def test_wand_matches_exhaustive(index, backends, case):
     q = _queries()[case]
     k = 10
-    wand = wand_topk(
-        index.doc_segments, q, index.term_stats, index.scalars.n_docs,
-        index.scalars.avgdl, k=k
-    ).collect()
+    got = _served(backends, q, k)
     exh = score_topk(index.tf_table, index.term_stats, index.scalars, q, k=k).collect()
-    assert [r.doc_id for r in wand] == [r.doc_id for r in exh]
-    for a, b in zip(wand, exh):
-        assert a.score == pytest.approx(b.score, rel=1e-9)
+    assert [d for d, _ in got] == [r.doc_id for r in exh]
+    for (_, a), b in zip(got, exh):
+        assert a == pytest.approx(b.score, rel=1e-9)
 
 
-def test_wand_random_queries_adversarial(index):
+def test_wand_random_queries_adversarial(index, backends):
     """50 random queries drawn from corpus vocabulary — rank identity."""
     rng = np.random.default_rng(7)
     w = vocab()
     for _ in range(50):
         n_terms = int(rng.integers(1, 6))
         q = " ".join(w[int(i)] for i in rng.integers(0, 3000, size=n_terms))
-        wand = wand_topk(
-            index.doc_segments, q, index.term_stats, index.scalars.n_docs,
-            index.scalars.avgdl, k=5
-        ).collect()
+        got = _served(backends, q, 5)
         exh = score_topk(index.tf_table, index.term_stats, index.scalars, q, k=5).collect()
-        assert [r.doc_id for r in wand] == [r.doc_id for r in exh], q
-        for a, b in zip(wand, exh):
-            assert a.score == pytest.approx(b.score, rel=1e-9)
+        assert [d for d, _ in got] == [r.doc_id for r in exh], q
+        for (_, a), b in zip(got, exh):
+            assert a == pytest.approx(b.score, rel=1e-9)
 
 
-def test_batch_wand_matches_exhaustive_batch(spark, index):
+def test_batch_equals_single_on_both_backends(backends):
+    """search_batch == search for every query of the agreement set, on
+    each backend, float bits included."""
+    qs = list(enumerate(_queries()[c] for c in QUERY_CASES))
+    batch = _served_batch(backends, qs, 10)
+    for qid, q in qs:
+        assert [(r.doc_id, r.score) for r in batch if r.query_id == qid] \
+            == _served(backends, q, 10), q
+        assert [r.rank for r in batch if r.query_id == qid] == \
+            list(range(1, 1 + sum(r.query_id == qid for r in batch)))
+
+
+def test_batch_wand_matches_exhaustive_batch(spark, index, backends):
     from searchengine_spark.operators.topk import batch_topk
-    from searchengine_spark.operators.wand import wand_topk_batch
 
     w = vocab()
     qs = [(0, w[0]), (1, f"{w[1]} {w[1]}"), (2, f"{w[0]} {w[4999]}"),
           (3, "zzznope"), (4, f"{w[2]} {w[7]} {w[30]}")]
-    got = wand_topk_batch(index.doc_segments, qs, index.term_stats,
-                          index.scalars.n_docs, index.scalars.avgdl, k=5).collect()
+    got = _served_batch(backends, qs, 5)
     qdf = spark.createDataFrame(qs, "query_id int, query string")
     want = batch_topk(qdf, index.tf_table, index.term_stats,
                       index.scalars, k=5).collect()
@@ -300,18 +368,17 @@ def test_dense_kernel_matches_bruteforce(case):
     assert d2.tobytes() == docs.tobytes() and s2.tobytes() == scores.tobytes()
 
 
-def test_reference_query_set_batch_agreement(spark, index):
+def test_reference_query_set_batch_agreement(spark, index, backends):
     """FIXTURES.md §2 reference query set (100 queries: hot / rare /
     absent / duplicate-term / mixed) — batch WAND vs exhaustive batch,
-    rank-identical across the whole set in one pass each."""
+    rank-identical across the whole set in one pass each, on both
+    backends."""
     from searchengine_spark.operators.topk import batch_topk
-    from searchengine_spark.operators.wand import wand_topk_batch
     from searchengine_spark.sources.synth import queries_pdf
 
     qpdf = queries_pdf(100)
     qs = [(int(i), q) for i, q in zip(qpdf["query_id"], qpdf["query"])]
-    got = wand_topk_batch(index.doc_segments, qs, index.term_stats,
-                          index.scalars.n_docs, index.scalars.avgdl, k=5).collect()
+    got = _served_batch(backends, qs, 5)
     qdf = spark.createDataFrame(qs, "query_id int, query string")
     want = batch_topk(qdf, index.tf_table, index.term_stats,
                       index.scalars, k=5).collect()
