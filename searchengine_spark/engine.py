@@ -13,14 +13,15 @@ HTTP loop serves ``Search(query)`` per request
 
 Load-time warm state = corpus scalars (a JSON read) + the cached
 term_stats table (small: one row per term). The first doc-sharded query
-decides where postings live, from the index itself: when its postings
-(``sum(df)``) fit a fixed share of the driver's available physical memory,
-the segments are decoded once into driver-side arrays
-(operators/wand.py ``ResidentIndex``) and every later query is scored
-there — the reference's RAM-resident model, with no Spark scan, exchange
-or Python worker per query. Larger indexes stay on storage and are read
-partition-pruned per query (``wand_topk``) — the RAM-residency model
-doesn't survive 10^12 turns, partition pruning does.
+decides where postings live, from the index itself (operators/wand.py
+``resident_index``): when its postings fit a fixed share of the driver's
+available memory, its Arrow size fits one collect, and it is no larger
+than the largest index measured resident, the segments are decoded once
+into driver-side arrays (``ResidentIndex``) and every later query is
+scored there — the reference's RAM-resident model, with no Spark scan,
+exchange or Python worker per query. Larger indexes stay on storage and
+are read partition-pruned per query (``wand_topk``) — the RAM-residency
+model doesn't survive 10^12 turns, partition pruning does.
 """
 
 from __future__ import annotations
@@ -37,9 +38,8 @@ from searchengine_spark.operators.ingest import tf_from_doc_map
 from searchengine_spark.operators.topk import score_topk
 from searchengine_spark.operators.wand import (
     query_qf,
-    resident_index,
-    wand_topk,
-    wand_topk_batch,
+    serve_topk,
+    serve_topk_batch,
     wand_topk_terms,
 )
 
@@ -65,11 +65,6 @@ class SearchEngine:
     #: "wand" | "term" | "exhaustive" | ...) — introspection for auto-mode
     #: selection; "resident" is the doc-sharded scorer run in the driver.
     last_search_mode: str | None = field(default=None, repr=False)
-    #: (doc_segments it was read from, ResidentIndex or None when over the
-    #: memory budget): built on the first doc-sharded query, rebuilt when
-    #: ``doc_segments`` is replaced (purge_deleted), never copied by
-    #: dataclasses.replace
-    _resident: tuple | None = field(default=None, init=False, repr=False)
 
     @staticmethod
     def load(spark: SparkSession, index_dir: str,
@@ -217,16 +212,6 @@ class SearchEngine:
             for t in terms if self._df_memo[t] > 0
         }
 
-    def _resident_index(self):
-        """The doc-sharded index decoded in the driver, or None when it
-        is over the memory budget (operators/wand.py resident_index).
-        Tombstones stay out of it: they are read per call."""
-        if self._resident is None or self._resident[0] is not self.doc_segments:
-            self._resident = (self.doc_segments, resident_index(
-                self.doc_segments, self.term_stats, self.scalars.n_docs,
-                self.scalars.avgdl))
-        return self._resident[1]
-
     def search(self, query: str, k: int = 10,
                mode: str | None = None) -> DataFrame:
         """Top-k (doc_id, score). mode: "wand" (the dense per-shard
@@ -245,10 +230,10 @@ class SearchEngine:
         mode="wand" still silently falls back to the term layout when
         only that layout exists (an index built by streaming
         compaction). A "wand" query is scored in the driver when the
-        index is resident (``_resident_index``; recorded as "resident"),
-        by the Spark plan otherwise. Per-term idf comes from the resident
-        df dict or the warm stats cache (``_idf_for``): repeat terms never
-        re-trigger a stats lookup."""
+        doc segments fit it (operators/wand.py ``serve_topk``; recorded
+        as "resident"), by the Spark plan otherwise. Per-term idf comes
+        from the resident df dict or the warm stats cache (``_idf_for``):
+        repeat terms never re-trigger a stats lookup."""
         if mode is None:
             if self.doc_segments is not None:
                 mode = "wand"
@@ -272,14 +257,11 @@ class SearchEngine:
         if mode == "wand":
             if self.doc_segments is None:
                 raise ValueError("index has no doc-segment layout")
-            res = self._resident_index()
-            if res is not None:
-                self.last_search_mode = "resident"
-                return res.topk(query, k=k, exclude=dead or None)
-            return wand_topk(self.doc_segments, query, self.term_stats,
-                             self.scalars.n_docs, self.scalars.avgdl, k=k,
-                             exclude=dead or None,
-                             idf_map=self._idf_for(query_qf(query)))
+            out, self.last_search_mode = serve_topk(
+                self.doc_segments, query, self.term_stats,
+                self.scalars.n_docs, self.scalars.avgdl, k=k,
+                exclude=dead or None, idf_for=self._idf_for)
+            return out
         from searchengine_spark.operators.deletes import exclude_tf
 
         tf = exclude_tf(tf_from_doc_map(self.doc_map), set(dead))
@@ -838,16 +820,12 @@ class SearchEngine:
         operators/wand.py _spread_groups; default 4x parallelism)."""
         if self.doc_segments is None:
             raise ValueError("index has no doc-segment layout")
-        res = self._resident_index()
-        if res is not None:
-            return res.topk_batch(queries, k=k,
-                                  exclude=self.tombstones() or None)
-        terms = {t for _, q in queries for t in query_qf(q)}
-        return wand_topk_batch(self.doc_segments, queries, self.term_stats,
-                               self.scalars.n_docs, self.scalars.avgdl, k=k,
-                               exclude=self.tombstones() or None,
-                               spread=spread,
-                               idf_map=self._idf_for(terms))
+        out, _ = serve_topk_batch(
+            self.doc_segments, queries, self.term_stats,
+            self.scalars.n_docs, self.scalars.avgdl, k=k,
+            exclude=self.tombstones() or None, idf_for=self._idf_for,
+            spread=spread)
+        return out
 
     def fetch(self, doc_ids: list[int]) -> DataFrame:
         """Doc-store lookup (the reference's GetTitle/wikitext seek,

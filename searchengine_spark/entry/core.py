@@ -178,18 +178,14 @@ def q_wand_topk_deletes(spark, sf_dir, query: str = "spark join fast",
     and the top-k refills with live docs. Stats stay the build-time
     values (pinned, Lucene semantics), so the oracle is plain exhaustive
     BM25 with full-corpus stats and a WHERE on the result set."""
-    from searchengine_spark.operators.wand import resident_index, wand_topk
+    from searchengine_spark.operators.wand import serve_topk
 
     segs, _, stats, scalars = _doc_segments(spark, sf_dir)
     dead = {r.doc_id for r in
             _docs(spark, sf_dir).select("doc_id")
             .filter(F.col("doc_id") % 17 == 3).collect()}
-    # SearchEngine's backend rule: the driver-resident scorer when the
-    # segments fit its memory budget, the Spark plan otherwise
-    res = resident_index(segs, stats, scalars.n_docs, scalars.avgdl)
-    topk = (res.topk(query, k=k + 8, exclude=dead) if res else
-            wand_topk(segs, query, stats, scalars.n_docs, scalars.avgdl,
-                      k=k + 8, exclude=dead))
+    topk, _ = serve_topk(segs, query, stats, scalars.n_docs, scalars.avgdl,
+                         k=k + 8, exclude=dead)
     return (
         topk.select("doc_id", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -221,12 +217,11 @@ def _wand_topk(query: str, k: int = 10):
     Fetching k+8 and re-applying orderBy/limit on the ROUNDED score matches
     the exhaustive entries' discipline."""
     def run(spark, sf_dir):
-        from searchengine_spark.operators.wand import resident_index, wand_topk
+        from searchengine_spark.operators.wand import serve_topk
 
         segs, _, stats, scalars = _doc_segments(spark, sf_dir)
-        res = resident_index(segs, stats, scalars.n_docs, scalars.avgdl)
-        topk = (res.topk(query, k=k + 8) if res else wand_topk(
-            segs, query, stats, scalars.n_docs, scalars.avgdl, k=k + 8))
+        topk, _ = serve_topk(segs, query, stats, scalars.n_docs,
+                             scalars.avgdl, k=k + 8)
         return (
             topk.select("doc_id", F.round("score", 6).alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -328,13 +323,11 @@ _BATCH_QUERIES = ["spark join fast", "dup", "the the data", "window agg stream",
 def q_batch_wand_topk(spark, sf_dir, k: int = 5):
     """Batch per-shard top-k: all queries in one segment scan, posting
     lists decoded once per shard. Oracle = the exhaustive batch SQL."""
-    from searchengine_spark.operators.wand import resident_index, wand_topk_batch
+    from searchengine_spark.operators.wand import serve_topk_batch
 
     segs, _, stats, scalars = _doc_segments(spark, sf_dir)
-    queries = list(enumerate(_BATCH_QUERIES))
-    res = resident_index(segs, stats, scalars.n_docs, scalars.avgdl)
-    out = (res.topk_batch(queries, k=k) if res else wand_topk_batch(
-        segs, queries, stats, scalars.n_docs, scalars.avgdl, k=k))
+    out, _ = serve_topk_batch(segs, list(enumerate(_BATCH_QUERIES)), stats,
+                              scalars.n_docs, scalars.avgdl, k=k)
     return out.select(
         "query_id", F.col("rank").cast("long").alias("rank"), "doc_id",
         F.round("score", 6).alias("score"),

@@ -35,6 +35,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -336,38 +337,65 @@ def decode_payload(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return delta_decode(dec(row.doc_gaps)), dec(row.tfs), dec(row.dls)
 
 
-def decode_table(table) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+def _binary_column(table, name: str) -> tuple[np.ndarray, np.ndarray]:
+    """(offsets, bytes) of a binary column of an Arrow table, read from
+    its buffers without a Python object per row: row i is
+    ``bytes[offsets[i]:offsets[i + 1]]``."""
+    arr = table.column(name).combine_chunks()
+    _, off, data = arr.buffers()
+    wide = arr.type.equals(pa.large_binary())
+    off = np.frombuffer(off, np.int64 if wide else np.int32)
+    off = off[arr.offset:arr.offset + len(arr) + 1].astype(np.int64)
+    return off, (np.frombuffer(data, np.uint8) if data is not None
+                 else np.zeros(0, np.uint8))
+
+
+def decode_table(table, chunk: int = 1 << 20,
+                 ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Every row of a segment Arrow table (``n``, ``codec``, ``doc_gaps``,
     ``tfs``, ``dls``) decoded at once -> (doc_ids int64, tfs, dls, starts):
     row i's postings are ``[starts[i], starts[i + 1])``, values identical
     to ``decode_payload`` row by row. Varint rows (the short-list
-    majority) decode as one concatenated blob per column — LEB128 is
-    self-delimiting, and the doc-gap prefix sum is re-based at every row
-    start; pack128 rows decode one by one."""
+    majority) decode as one concatenated blob per column and run of rows
+    holding about ``chunk`` postings — LEB128 is self-delimiting, and the
+    doc-gap prefix sum is re-based at every row start — so the decoder's
+    temporaries stay bounded by ``chunk`` whatever the table's size;
+    pack128 rows decode one by one."""
     n = table.column("n").to_numpy().astype(np.int64)
     starts = np.zeros(len(n) + 1, np.int64)
     np.cumsum(n, out=starts[1:])
     codecs = table.column("codec").to_pylist()
-    cols = {c: table.column(c).to_pylist() for c in ("doc_gaps", "tfs", "dls")}
-    docs, tfs, dls = (np.empty(starts[-1], np.uint64) for _ in range(3))
     var = np.array([c in (None, "varint") for c in codecs], bool)
-    if var.any():
-        lens = n[var]
-        offs = np.zeros(len(lens) + 1, np.int64)
-        np.cumsum(lens, out=offs[1:])
-        pos = np.arange(offs[-1]) + np.repeat(starts[:-1][var] - offs[:-1], lens)
-        blob = {c: varint_decode(b"".join(v for v, ok in zip(vals, var) if ok))
-                for c, vals in cols.items()}
-        run = np.cumsum(blob["doc_gaps"], dtype=np.uint64)
-        before = np.concatenate(([np.uint64(0)], run))[offs[:-1]]
-        docs[pos] = run - np.repeat(before, lens)
-        tfs[pos], dls[pos] = blob["tfs"], blob["dls"]
+    cols = {c: _binary_column(table, c) for c in ("doc_gaps", "tfs", "dls")}
+    out = {c: np.empty(starts[-1], np.uint64) for c in cols}
+    edges = np.unique(np.concatenate((
+        [0], np.searchsorted(starts, np.arange(chunk, starts[-1], chunk)),
+        [len(n)])))
+    for a, b in zip(edges[:-1], edges[1:]):
+        v = var[a:b]
+        if not v.any():
+            continue
+        lens = n[a:b][v]
+        pos = np.flatnonzero(np.repeat(v, n[a:b])) + starts[a]
+        for c, (off, data) in cols.items():
+            blob = data[off[a]:off[b]]
+            if not v.all():
+                blob = blob[np.repeat(v, np.diff(off[a:b + 1]))]
+            vals = varint_decode(blob)
+            if c == "doc_gaps":
+                np.cumsum(vals, out=vals)
+                first = np.concatenate(([0], np.cumsum(lens)[:-1]))
+                vals -= np.repeat(np.concatenate(
+                    ([np.uint64(0)], vals))[first], lens)
+            out[c][pos] = vals
     for i in np.flatnonzero(~var):
         dec = CODECS[codecs[i]][1]
         s, e = starts[i], starts[i + 1]
-        docs[s:e] = delta_decode(dec(cols["doc_gaps"][i]))
-        tfs[s:e], dls[s:e] = dec(cols["tfs"][i]), dec(cols["dls"][i])
-    return docs.view(np.int64), tfs, dls, starts
+        gaps, tfs, dls = (data[off[i]:off[i + 1]]
+                          for off, data in cols.values())
+        out["doc_gaps"][s:e] = delta_decode(dec(gaps))
+        out["tfs"][s:e], out["dls"][s:e] = dec(tfs), dec(dls)
+    return out["doc_gaps"].view(np.int64), out["tfs"], out["dls"], starts
 
 
 def segments_to_tf(segments: DataFrame) -> DataFrame:

@@ -24,12 +24,14 @@ of the columnar inverted index and vectorized Python UDF papers in
 PAPERS.md); the module names (``wand_topk`` ...) are kept as the public
 API of the serving path.
 
-An index whose postings fit a share of the driver's memory
-(``resident_index``) is served without Spark on the query path:
-``ResidentIndex`` decodes the segments once into driver-side arrays and
-feeds the same kernel the same per-shard rows, so results are
+An index that fits the driver (``resident_index``: its postings in a
+share of the driver's memory, its Arrow size in one collect, and no
+larger than the largest index measured) is served without Spark on the
+query path: ``ResidentIndex`` decodes the segments once into driver-side
+arrays and feeds the same kernel the same per-shard rows, so results are
 bit-identical to the plans above; those stay the path for larger
-indexes.
+indexes. ``serve_topk`` / ``serve_topk_batch`` apply that rule, once per
+``doc_segments`` frame, for the engine and the registry entries alike.
 
 Correctness contract: identical (doc_id, score) top-k as the exhaustive
 relational scorer (operators/topk.py score_topk) under tie-break
@@ -40,11 +42,15 @@ of the kernel against a brute-force sort.
 from __future__ import annotations
 
 import os
+import warnings
+import weakref
 from collections import Counter
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -466,15 +472,28 @@ def wand_topk_batch(
 
 
 # ---------------------------------------------------------------------------
-# driver-resident backend
+# serving: the driver-resident backend and the rule that picks it
 # ---------------------------------------------------------------------------
 
-#: share of the driver's available physical memory a resident index may use
+#: share of the driver's available memory a resident index may use
 _RESIDENT_SHARE = 0.25
-#: driver bytes per resident posting: the decoded int64 doc and uint64
-#: tf/dl arrays (24 B), plus the load's transient Arrow table and decode
-#: buffers
+#: driver (Python) bytes per posting while the resident copy is built:
+#: the peak RSS rise measured 30-49 B (17.1M- and 0.12M-posting indexes;
+#: per-row and per-term state weighs most on small ones), rounded up.
+#: The decoded arrays it keeps are 24 B of it (BENCH.md)
 _POSTING_BYTES = 64
+#: the largest index (postings) served resident: the largest whose
+#: resident build (10.4 s, 490 MB driver RSS) and warm latency (55 ms
+#: p50 against 1.6 s on the Spark plan) were measured, a 1.01M-turn
+#: corpus of 17.1M postings (BENCH.md). Larger indexes take the Spark
+#: plan until they are measured.
+_RESIDENT_MAX_POSTINGS = 17_000_000
+#: share of the driver JVM heap one collect of the segments may fill: the
+#: JVM holds the collected Arrow batches until Python has read them
+_HEAP_SHARE = 0.25
+#: Arrow bytes per segment row besides its term and payload bytes
+#: (offsets, shard, n, codec); measured 34 on the perfbench index
+_ROW_BYTES = 48
 
 _BATCH_RESULT_SCHEMA = T.StructType(
     [
@@ -486,23 +505,151 @@ _BATCH_RESULT_SCHEMA = T.StructType(
 )
 
 
+def _read_text(path: str) -> str:
+    with open(path) as f:
+        return f.read().strip()
+
+
+def _cgroup_headroom(proc: str = "/proc/self/cgroup",
+                     root: str = "/sys/fs/cgroup") -> int | None:
+    """Bytes left under this process's cgroup memory limit (v2
+    ``memory.max``, v1 ``memory.limit_in_bytes``); None when no limit is
+    set or none can be read. The usage counted there includes the
+    driver JVM's resident heap."""
+    try:
+        with open(proc) as f:
+            entries = [line.rstrip("\n").split(":", 2) for line in f]
+    except OSError:
+        return None
+    for _, controllers, path in (e for e in entries if len(e) == 3):
+        if controllers == "":
+            base, files = root, ("memory.max", "memory.current")
+        elif "memory" in controllers.split(","):
+            base, files = os.path.join(root, "memory"), (
+                "memory.limit_in_bytes", "memory.usage_in_bytes")
+        else:
+            continue
+        # the process's own group, or the namespace root a container sees
+        for d in (base + path, base):
+            try:
+                limit, used = (_read_text(os.path.join(d, f)) for f in files)
+            except OSError:
+                continue
+            if limit != "max" and int(limit) < 1 << 60:
+                return max(0, int(limit) - int(used))
+            break
+    return None
+
+
 def _budget_postings() -> int:
     """Postings the driver may hold decoded: ``_RESIDENT_SHARE`` of the
-    physical memory the OS reports available, at ``_POSTING_BYTES`` each.
-    The one switch between the resident and the Spark path."""
+    memory available to it (the OS's free physical memory, or the room
+    left under its cgroup limit when smaller) at ``_POSTING_BYTES`` each,
+    capped at ``_RESIDENT_MAX_POSTINGS``. The switch between the resident
+    and the Spark path (tests force the Spark path by patching it)."""
     avail = os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
-    return int(avail * _RESIDENT_SHARE) // _POSTING_BYTES
+    cgroup = _cgroup_headroom()
+    if cgroup is not None:
+        avail = min(avail, cgroup)
+    return min(_RESIDENT_MAX_POSTINGS,
+               int(avail * _RESIDENT_SHARE) // _POSTING_BYTES)
+
+
+def _collect_budget_bytes(spark) -> int:
+    """Arrow bytes one ``toArrow()`` may bring to the driver: under
+    ``spark.driver.maxResultSize`` (every task result counts against it
+    and the job fails past it; 0 means no limit) and ``_HEAP_SHARE`` of
+    the driver JVM heap."""
+    jvm = spark.sparkContext._jvm
+    heap = int(jvm.java.lang.Runtime.getRuntime().maxMemory() * _HEAP_SHARE)
+    limit = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.sparkContext.getConf().get("spark.driver.maxResultSize", "1g"))
+    return min(heap, int(limit)) if limit > 0 else heap
 
 
 def resident_index(doc_segments: DataFrame, term_stats: DataFrame,
                    n_docs: int, avgdl: float) -> "ResidentIndex | None":
-    """The doc-sharded index decoded into the driver when its postings
-    (``sum(df)`` of ``term_stats``, one tiny agg) fit ``_budget_postings``;
-    None when they do not, and ``wand_topk`` / ``wand_topk_batch`` serve."""
-    postings = term_stats.agg(F.sum("df")).first()[0] or 0
-    if postings > _budget_postings():
+    """The doc-sharded index decoded into the driver when it fits; None
+    when it does not, and the Spark plan serves. One agg over the
+    segments reads their postings (``sum(n)``) and their Arrow size
+    (payload and term bytes); the postings must fit ``_budget_postings``
+    and the bytes ``_collect_budget_bytes``. A build that still fails
+    (the collect, or driver memory) also gives None."""
+    postings, nbytes = doc_segments.agg(
+        F.sum("n"),
+        F.sum(F.octet_length("term") + F.octet_length("doc_gaps")
+              + F.octet_length("tfs") + F.octet_length("dls") + _ROW_BYTES),
+    ).first()
+    if (postings or 0) > _budget_postings() or \
+            (nbytes or 0) > _collect_budget_bytes(doc_segments.sparkSession):
         return None
-    return ResidentIndex(doc_segments, term_stats, n_docs, avgdl)
+    try:
+        return ResidentIndex(doc_segments, term_stats, n_docs, avgdl)
+    except (Py4JError, PySparkException, MemoryError) as e:
+        warnings.warn(f"resident index not built, serving with the Spark "
+                      f"plan: {type(e).__name__}: {str(e)[:200]}",
+                      RuntimeWarning, stacklevel=2)
+        return None
+
+
+#: ResidentIndex (or None: the Spark plan serves) per live doc_segments
+#: DataFrame, keyed by its id; an entry goes when the frame is freed
+_RESIDENT: dict[tuple, tuple] = {}
+
+
+def resident_for(doc_segments: DataFrame, term_stats: DataFrame,
+                 n_docs: int, avgdl: float) -> "ResidentIndex | None":
+    """``resident_index`` once per ``doc_segments`` DataFrame: a new one
+    (``purge_deleted`` reads the rewritten segments into one) gets a new
+    copy, and a build that gave None is not retried. ``term_stats`` is
+    read only when the copy is built (its df values are build-time
+    constants)."""
+    key = (id(doc_segments), n_docs, avgdl)
+    hit = _RESIDENT.get(key)
+    if hit is not None and hit[0]() is doc_segments:
+        return hit[1]
+    res = resident_index(doc_segments, term_stats, n_docs, avgdl)
+    _RESIDENT[key] = (weakref.ref(doc_segments,
+                                  lambda _, key=key: _RESIDENT.pop(key, None)),
+                      res)
+    return res
+
+
+def serve_topk(
+    doc_segments: DataFrame, query: str, term_stats: DataFrame,
+    n_docs: int, avgdl: float, k: int = 10,
+    exclude: set | frozenset | DataFrame | DocIdBitmap | None = None,
+    idf_for=None,
+) -> tuple[DataFrame, str]:
+    """Top-k (doc_id, score) from the backend the index picks -> (result,
+    "resident" | "wand"): ``ResidentIndex.topk`` when the index fits the
+    driver (``resident_for``), ``wand_topk`` otherwise. ``idf_for``: a
+    warm-cache idf function of a term list, called on the Spark path
+    only (the resident copy holds every df)."""
+    res = resident_for(doc_segments, term_stats, n_docs, avgdl)
+    if res is not None:
+        return res.topk(query, k=k, exclude=exclude), "resident"
+    idf_map = idf_for(list(query_qf(query))) if idf_for else None
+    return wand_topk(doc_segments, query, term_stats, n_docs, avgdl, k=k,
+                     exclude=exclude, idf_map=idf_map), "wand"
+
+
+def serve_topk_batch(
+    doc_segments: DataFrame, queries: list[tuple[int, str]],
+    term_stats: DataFrame, n_docs: int, avgdl: float, k: int = 10,
+    exclude: set | frozenset | DataFrame | DocIdBitmap | None = None,
+    idf_for=None, spread: int | None = None,
+) -> tuple[DataFrame, str]:
+    """``serve_topk`` for a batch: (query_id, rank, doc_id, score) from
+    ``ResidentIndex.topk_batch`` or ``wand_topk_batch``."""
+    res = resident_for(doc_segments, term_stats, n_docs, avgdl)
+    if res is not None:
+        return res.topk_batch(queries, k=k, exclude=exclude), "resident"
+    terms = {t for _, q in queries for t in query_qf(q)}
+    idf_map = idf_for(sorted(terms)) if idf_for else None
+    return wand_topk_batch(doc_segments, queries, term_stats, n_docs, avgdl,
+                           k=k, exclude=exclude, spread=spread,
+                           idf_map=idf_map), "wand"
 
 
 class ResidentIndex:

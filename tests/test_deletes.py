@@ -144,6 +144,13 @@ def test_batch_and_fetch_respect_tombstones(eng):
     assert eng.fetch(dead).count() == 0
 
 
+def _resident(eng):
+    from searchengine_spark.operators.wand import resident_for
+
+    return resident_for(eng.doc_segments, eng.term_stats,
+                        eng.scalars.n_docs, eng.scalars.avgdl)
+
+
 def test_resident_copy_never_stale(spark, small, tmp_path_factory):
     """The driver-resident copy of the doc segments never serves a stale
     index: (a) a delete made after the first query is honoured by the
@@ -158,12 +165,12 @@ def test_resident_copy_never_stale(spark, small, tmp_path_factory):
     eng = SearchEngine.load(spark, out)
     before = _ranked(eng.search(QUERY, k=10))
     assert eng.last_search_mode == "resident"
-    copy = eng._resident
+    copy = _resident(eng)
     dead = [d for d, _ in before[:3]]
 
     eng.delete_docs(dead)
     masked = _ranked(eng.search(QUERY, k=10))
-    assert eng.last_search_mode == "resident" and eng._resident is copy
+    assert eng.last_search_mode == "resident" and _resident(eng) is copy
     assert not set(dead) & {d for d, _ in masked} and len(masked) == 10
     assert masked == _ranked(eng.search(QUERY, k=10, mode="exhaustive"))
     batch = eng.search_batch([(0, QUERY)], k=10).collect()
@@ -173,7 +180,8 @@ def test_resident_copy_never_stale(spark, small, tmp_path_factory):
     eng.purge_deleted(n_shards=N_SHARDS)
     assert eng.tombstones() == frozenset()
     assert _ranked(eng.search(QUERY, k=10)) == masked
-    assert eng.last_search_mode == "resident" and eng._resident is not copy
+    assert eng.last_search_mode == "resident" and copy is not None \
+        and _resident(eng) is not copy
     batch = eng.search_batch([(0, QUERY)], k=10).collect()
     assert not set(dead) & {r.doc_id for r in batch}
 

@@ -31,8 +31,15 @@ def spark_engine(spark, engine):
     eng = SearchEngine.load(spark, engine.index_dir)
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(wand, "_budget_postings", lambda: 0)
-        assert eng._resident_index() is None
+        assert _resident(eng) is None
     return eng
+
+
+def _resident(eng):
+    """The engine's driver-resident copy (built on first use), or None
+    when the Spark plan serves it."""
+    return wand.resident_for(eng.doc_segments, eng.term_stats,
+                             eng.scalars.n_docs, eng.scalars.avgdl)
 
 
 def _plan(df) -> str:
@@ -226,6 +233,82 @@ def test_auto_mode_serves_resident_without_stats(engine, spark_engine):
     assert a == b
     assert [(r.doc_id, r.score) for r in batch if r.query_id == 0] == a
     assert [r for r in batch if r.query_id == 1] == []
+
+
+def test_failed_resident_build_falls_back_to_spark(spark, engine,
+                                                   monkeypatch):
+    """A resident build whose collect fails (as past
+    spark.driver.maxResultSize) leaves the index to the Spark plan: the
+    query is served, with the same rows as the resident engine, and the
+    failed build is not retried on the next query or batch."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+
+    def failing_to_arrow(df):
+        calls.append(df)
+        spark._jvm.java.lang.Long.parseLong("maxResultSize")  # raises
+
+    eng = SearchEngine.load(spark, engine.index_dir)
+    monkeypatch.setattr(DataFrame, "toArrow", failing_to_arrow)
+    q = " ".join(vocab()[:3])
+    with pytest.warns(RuntimeWarning, match="Spark plan"):
+        got = [(r.doc_id, r.score) for r in eng.search(q, k=5).collect()]
+    assert eng.last_search_mode == "wand" and len(calls) == 1
+    assert got == [(r.doc_id, r.score) for r in engine.search(q, k=5).collect()]
+    assert eng.search(q, k=5).collect() and eng.last_search_mode == "wand"
+    assert eng.search_batch([(0, q)], k=5).collect() and len(calls) == 1
+
+
+def test_resident_needs_room_in_one_collect(spark, engine, monkeypatch):
+    """An index whose Arrow size does not fit one collect
+    (maxResultSize, driver heap) is never collected: the Spark plan
+    serves it, however much driver memory is free."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    eng = SearchEngine.load(spark, engine.index_dir)
+    monkeypatch.setattr(wand, "_collect_budget_bytes", lambda spark: 0)
+    monkeypatch.setattr(DataFrame, "toArrow", lambda df: pytest.fail(
+        "collected an index over the collect budget"))
+    assert _resident(eng) is None
+    eng.search(vocab()[0], k=5).collect()
+    assert eng.last_search_mode == "wand"
+
+
+def test_memory_budget_reads_cgroup_limit(tmp_path, monkeypatch):
+    """The driver memory budget takes the room left under the process's
+    cgroup limit (v2 memory.max, v1 memory.limit_in_bytes) when it is
+    below the OS's free memory; no limit ("max", or v1's near-2^63
+    value) or no readable file leaves the OS figure."""
+    def layout(proc_line, files):
+        root = tmp_path / str(len(list(tmp_path.iterdir())))
+        for rel, text in files.items():
+            (root / rel).parent.mkdir(parents=True, exist_ok=True)
+            (root / rel).write_text(text)
+        (root / "cgroup").write_text(proc_line)
+        return str(root / "cgroup"), str(root / "fs")
+
+    v2 = layout("0::/job\n", {"fs/job/memory.max": "1000\n",
+                               "fs/job/memory.current": "400\n"})
+    v1 = layout("4:memory:/job\n1:cpu:/\n", {
+        "fs/memory/memory.limit_in_bytes": "5000\n",
+        "fs/memory/memory.usage_in_bytes": "1000\n"})
+    unlimited = layout("0::/job\n", {"fs/job/memory.max": "max\n",
+                                      "fs/job/memory.current": "4\n"})
+    v1_unlimited = layout("4:memory:/job\n", {
+        "fs/memory/job/memory.limit_in_bytes": "9223372036854771712\n",
+        "fs/memory/job/memory.usage_in_bytes": "1\n"})
+    assert wand._cgroup_headroom(*v2) == 600
+    assert wand._cgroup_headroom(*v1) == 4000  # namespace root fallback
+    assert wand._cgroup_headroom(*unlimited) is None
+    assert wand._cgroup_headroom(*v1_unlimited) is None
+    assert wand._cgroup_headroom(str(tmp_path / "none"), "/") is None
+
+    monkeypatch.setattr(wand, "_cgroup_headroom",
+                        lambda: 40 * wand._POSTING_BYTES)
+    assert wand._budget_postings() == 10  # a quarter of the cgroup room
+    monkeypatch.setattr(wand, "_cgroup_headroom", lambda: None)
+    assert 0 < wand._budget_postings() <= wand._RESIDENT_MAX_POSTINGS
 
 
 def test_search_batch_uses_warm_stats_cache(spark_engine):

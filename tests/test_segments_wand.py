@@ -46,11 +46,15 @@ def backends(spark, index, tmp_path_factory):
         eng = SearchEngine(
             spark=spark, index_dir=str(tmp_path_factory.mktemp(mode)),
             doc_map=index.doc_map, term_stats=index.term_stats,
-            scalars=index.scalars, doc_segments=index.doc_segments)
+            scalars=index.scalars,
+            # a frame of its own: the backend choice is cached per frame
+            doc_segments=index.doc_segments.alias(mode))
         with pytest.MonkeyPatch.context() as mp:
             if mode == "wand":
                 mp.setattr(wand, "_budget_postings", lambda: 0)
-            assert (eng._resident_index() is None) == (mode == "wand")
+            assert (wand.resident_for(
+                eng.doc_segments, eng.term_stats, eng.scalars.n_docs,
+                eng.scalars.avgdl) is None) == (mode == "wand")
         out[mode] = eng
     return out
 
@@ -99,22 +103,26 @@ def test_term_segments_roundtrip(index):
     assert _tf_set(segments_to_tf(index.term_segments)) == _tf_set(index.tf_table)
 
 
-def test_decode_table_equals_row_decode(index):
-    """The resident index's whole-table decode (one concatenated varint
-    blob per column, pack128 rows one by one) yields exactly
-    decode_payload's arrays for every row, both codecs present."""
+@pytest.mark.parametrize("chunk", [1 << 20, 7])
+def test_decode_table_equals_row_decode(index, chunk):
+    """The resident index's whole-table decode (varint rows as one
+    concatenated blob per column and run of about ``chunk`` postings,
+    pack128 rows one by one) yields exactly decode_payload's arrays for
+    every row, both codecs present, also on a sliced table (buffers read
+    at a non-zero array offset)."""
     from searchengine_spark.operators.segments import decode_table
 
-    table = index.doc_segments.toArrow()
-    docs, tfs, dls, starts = decode_table(table)
-    rows = table.to_pylist()
-    assert {r["codec"] for r in rows} == {"varint", "pack128"}
-    for i, r in enumerate(rows):
-        d, t, l = decode_payload(type("Row", (), r))
-        s, e = starts[i], starts[i + 1]
-        assert docs[s:e].tolist() == d.tolist() and tfs[s:e].tolist() == \
-            t.tolist() and dls[s:e].tolist() == l.tolist()
-    assert starts[-1] == sum(r["n"] for r in rows)
+    whole = index.doc_segments.toArrow()
+    for table in (whole, whole.slice(5)):
+        docs, tfs, dls, starts = decode_table(table, chunk=chunk)
+        rows = table.to_pylist()
+        assert {r["codec"] for r in rows} == {"varint", "pack128"}
+        for i, r in enumerate(rows):
+            d, t, l = decode_payload(type("Row", (), r))
+            s, e = starts[i], starts[i + 1]
+            assert docs[s:e].tolist() == d.tolist() and tfs[s:e].tolist() \
+                == t.tolist() and dls[s:e].tolist() == l.tolist()
+        assert starts[-1] == sum(r["n"] for r in rows)
 
 
 def test_doc_shards_are_ranges(index):
