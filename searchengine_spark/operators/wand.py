@@ -570,18 +570,21 @@ def _collect_budget_bytes(spark) -> int:
 def resident_index(doc_segments: DataFrame, term_stats: DataFrame,
                    n_docs: int, avgdl: float) -> "ResidentIndex | None":
     """The doc-sharded index decoded into the driver when it fits; None
-    when it does not, and the Spark plan serves. One agg over the
-    segments reads their postings (``sum(n)``) and their Arrow size
-    (payload and term bytes); the postings must fit ``_budget_postings``
-    and the bytes ``_collect_budget_bytes``. A build that still fails
-    (the collect, or driver memory) also gives None."""
-    postings, nbytes = doc_segments.agg(
-        F.sum("n"),
-        F.sum(F.octet_length("term") + F.octet_length("doc_gaps")
-              + F.octet_length("tfs") + F.octet_length("dls") + _ROW_BYTES),
-    ).first()
-    if (postings or 0) > _budget_postings() or \
-            (nbytes or 0) > _collect_budget_bytes(doc_segments.sparkSession):
+    when it does not, and the Spark plan serves. The index's postings
+    (``sum(df)`` of ``term_stats``, a small table) must fit
+    ``_budget_postings``; only then does one agg over the segments
+    estimate their Arrow size (term and payload bytes), which must fit
+    ``_collect_budget_bytes`` — so an index over the budget never has
+    its payload read. A build that still fails (the collect, or driver
+    memory) also gives None."""
+    postings = term_stats.agg(F.sum("df")).first()[0] or 0
+    if postings > _budget_postings():
+        return None
+    nbytes = doc_segments.agg(F.sum(
+        F.octet_length("term") + F.octet_length("doc_gaps")
+        + F.octet_length("tfs") + F.octet_length("dls") + _ROW_BYTES,
+    )).first()[0] or 0
+    if nbytes > _collect_budget_bytes(doc_segments.sparkSession):
         return None
     try:
         return ResidentIndex(doc_segments, term_stats, n_docs, avgdl)
