@@ -44,6 +44,30 @@ from searchengine_spark.operators.wand import (
 )
 
 
+#: the layouts purge_deleted rewrites with a rename-aside swap
+_SWAPPED = ("doc_segments.parquet", "term_segments.parquet",
+            "pos_postings.parquet", "doc_map.parquet")
+
+
+def _finish_swap(live_dir: str) -> None:
+    """Complete a purge swap (``purge_deleted``) that a crash cut between
+    its two renames, which leaves ``live_dir`` absent: the rewritten
+    ``.purge`` copy goes in when its write committed (``_SUCCESS``), the
+    ``.old`` one goes back otherwise. Either copy serves the same rows
+    while tombstones.json, cleared only after every swap, still masks the
+    purged docs. A leftover ``.old`` beside a live dir is deleted."""
+    import shutil
+
+    old, new = live_dir + ".old", live_dir + ".purge"
+    if not os.path.exists(live_dir):
+        if os.path.exists(os.path.join(new, "_SUCCESS")):
+            os.rename(new, live_dir)
+        elif os.path.exists(old):
+            os.rename(old, live_dir)
+    if os.path.exists(live_dir):
+        shutil.rmtree(old, ignore_errors=True)
+
+
 @dataclass
 class SearchEngine:
     spark: SparkSession
@@ -69,6 +93,8 @@ class SearchEngine:
     @staticmethod
     def load(spark: SparkSession, index_dir: str,
              cache_stats: bool = True) -> "SearchEngine":
+        for name in _SWAPPED:
+            _finish_swap(os.path.join(index_dir, name))
         with open(os.path.join(index_dir, "scalars.json")) as f:
             s = json.load(f)
         stats = spark.read.parquet(os.path.join(index_dir, "term_stats.parquet"))
@@ -144,21 +170,19 @@ class SearchEngine:
             return 0
         import shutil
 
-        def _swap(live_dir: str, new_dir: str) -> None:
-            # crash-safe swap: rename-aside, rename-in, then delete —
-            # at no instant is the live path absent without a complete
-            # replacement one rename away (a plain rmtree+rename loses
-            # the index if the process dies between the two)
+        def _rewrite(live_dir: str, df) -> None:
+            new_dir = live_dir + ".purge"
+            df.write.mode("overwrite").parquet(new_dir)
+            # crash-safe swap: rename-aside, rename-in, then delete — at
+            # no instant is the live path absent without a complete
+            # replacement one rename away, which load() puts back
+            # (_finish_swap); a plain rmtree+rename loses the index if
+            # the process dies between the two
             old = live_dir + ".old"
             shutil.rmtree(old, ignore_errors=True)
             os.rename(live_dir, old)
             os.rename(new_dir, live_dir)
             shutil.rmtree(old, ignore_errors=True)
-
-        def _rewrite(live_dir: str, df) -> None:
-            new_dir = live_dir + ".purge"
-            df.write.mode("overwrite").parquet(new_dir)
-            _swap(live_dir, new_dir)
 
         dead_ids = [int(d) for d in dead]
         if self.doc_segments is not None:

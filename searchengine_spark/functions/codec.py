@@ -30,6 +30,7 @@ __all__ = [
     "varint_decode",
     "pack128_encode",
     "pack128_decode",
+    "pack128_decode_rows",
     "delta_encode",
     "delta_decode",
     "encode_postings",
@@ -117,29 +118,72 @@ def pack128_encode(values: np.ndarray) -> bytes:
 def pack128_decode(buf: bytes) -> np.ndarray:
     """Inverse of pack128_encode -> uint64 array."""
     b = np.frombuffer(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, np.uint64)
-    first_end = int(np.nonzero((b & 0x80) == 0)[0][0])
-    n = int(varint_decode(bytes(b[:first_end + 1]))[0])
-    out = np.empty(n, np.uint64)
-    pos = first_end + 1
-    got = 0
-    while got < n:
-        m = min(PACK_BLOCK, n - got)
-        w = int(b[pos])
-        pos += 1
+    return pack128_decode_rows(b, np.zeros(1, np.int64),
+                               np.full(1, b.size, np.int64))
+
+
+#: blocks unpacked together at most, so a decode's temporaries stay
+#: bounded (at width w, 128 * w bytes of bits per block)
+_UNPACK_BLOCKS = 256
+
+
+def pack128_decode_rows(data: np.ndarray, begins: np.ndarray,
+                        ends: np.ndarray) -> np.ndarray:
+    """Many pack128 buffers at once, buffer i being the uint8 bytes
+    ``data[begins[i]:ends[i]]`` -> their values concatenated (uint64).
+
+    One pass over the headers reads each block's width and payload
+    offset (a count, then per block a width byte and ``ceil(m * width /
+    8)`` packed bytes); then the blocks of each width, across buffers,
+    decode together: one ``np.unpackbits`` over their payloads, read as
+    whole 128-value blocks (the bits past a short last block are
+    dropped), and their bit rows, padded to whole bytes, packed back
+    into little-endian words."""
+    mv = memoryview(np.ascontiguousarray(data, np.uint8))
+    widths, payloads, outs, lens = [], [], [], []
+    total = 0
+    for pos, end in zip(begins.tolist(), ends.tolist()):
+        if pos == end:
+            continue
+        n = shift = 0
+        while True:
+            byte = mv[pos]
+            pos += 1
+            n |= (byte & 0x7F) << shift
+            shift += 7
+            if byte < 0x80:
+                break
+        for s in range(0, n, PACK_BLOCK):
+            m, w = min(PACK_BLOCK, n - s), mv[pos]
+            widths.append(w)
+            payloads.append(pos + 1)
+            outs.append(total + s)
+            lens.append(m)
+            pos += 1 + (m * w + 7) // 8
+        total += n
+    out = np.zeros(total, np.uint64)
+    widths, payloads, outs, lens = (np.array(x, np.int64) for x in (
+        widths, payloads, outs, lens))
+    slot = np.arange(PACK_BLOCK)
+    for w in np.unique(widths).tolist():
         if w == 0:
-            out[got:got + m] = 0
-        else:
-            nby = (m * w + 7) // 8
-            bits = np.unpackbits(
-                b[pos:pos + nby], bitorder="little", count=m * w
-            ).reshape(m, w).astype(np.uint64)
-            out[got:got + m] = (
-                bits << np.arange(w, dtype=np.uint64)
-            ).sum(axis=1, dtype=np.uint64)
-            pos += nby
-        got += m
+            continue
+        nb = (w + 7) // 8               # whole bytes per value
+        blocks = np.flatnonzero(widths == w)
+        for g in np.array_split(blocks, range(
+                _UNPACK_BLOCKS, len(blocks), _UNPACK_BLOCKS)):
+            at = payloads[g][:, None] + np.arange(PACK_BLOCK * w // 8)
+            bits = np.unpackbits(data[np.minimum(at, len(data) - 1)],
+                                 axis=1, bitorder="little")
+            wide = np.zeros((len(g) * PACK_BLOCK, 8 * nb), np.uint8)
+            wide[:, :w] = bits.reshape(-1, w)
+            packed = np.packbits(wide, axis=1, bitorder="little")
+            if nb not in (1, 2, 4, 8):
+                packed = np.concatenate(
+                    (packed, np.zeros((len(packed), 8 - nb), np.uint8)), 1)
+            vals = packed.view(f"<u{packed.shape[1]}").reshape(len(g), -1)
+            keep = slot < lens[g][:, None]
+            out[(outs[g][:, None] + slot)[keep]] = vals[keep]
     return out
 
 

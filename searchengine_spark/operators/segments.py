@@ -45,6 +45,7 @@ from searchengine_spark.functions.codec import (
     PACK_BLOCK,
     decode_postings,
     delta_decode,
+    pack128_decode_rows,
     pack128_encode,
     varint_decode,
     varint_encode_with_offsets,
@@ -355,46 +356,47 @@ def decode_table(table, chunk: int = 1 << 20,
     """Every row of a segment Arrow table (``n``, ``codec``, ``doc_gaps``,
     ``tfs``, ``dls``) decoded at once -> (doc_ids int64, tfs, dls, starts):
     row i's postings are ``[starts[i], starts[i + 1])``, values identical
-    to ``decode_payload`` row by row. Varint rows (the short-list
-    majority) decode as one concatenated blob per column and run of rows
-    holding about ``chunk`` postings — LEB128 is self-delimiting, and the
-    doc-gap prefix sum is re-based at every row start — so the decoder's
-    temporaries stay bounded by ``chunk`` whatever the table's size;
-    pack128 rows decode one by one."""
+    to ``decode_payload`` row by row. Rows go in runs holding about
+    ``chunk`` postings, so the decoder's temporaries stay bounded by
+    ``chunk`` whatever the table's size. In a run, the varint rows (the
+    short-list majority) decode as one concatenated blob per column —
+    LEB128 is self-delimiting — and the pack128 rows as one batch per
+    column (``pack128_decode_rows``); the doc-gap prefix sum is re-based
+    at every row start."""
     n = table.column("n").to_numpy().astype(np.int64)
     starts = np.zeros(len(n) + 1, np.int64)
     np.cumsum(n, out=starts[1:])
     codecs = table.column("codec").to_pylist()
     var = np.array([c in (None, "varint") for c in codecs], bool)
+    unknown = {c for c in codecs if c not in (None, "varint", "pack128")}
+    if unknown:
+        raise ValueError(f"unknown segment codecs: {sorted(unknown)}")
     cols = {c: _binary_column(table, c) for c in ("doc_gaps", "tfs", "dls")}
     out = {c: np.empty(starts[-1], np.uint64) for c in cols}
     edges = np.unique(np.concatenate((
         [0], np.searchsorted(starts, np.arange(chunk, starts[-1], chunk)),
         [len(n)])))
     for a, b in zip(edges[:-1], edges[1:]):
-        v = var[a:b]
-        if not v.any():
-            continue
-        lens = n[a:b][v]
-        pos = np.flatnonzero(np.repeat(v, n[a:b])) + starts[a]
-        for c, (off, data) in cols.items():
-            blob = data[off[a]:off[b]]
-            if not v.all():
-                blob = blob[np.repeat(v, np.diff(off[a:b + 1]))]
-            vals = varint_decode(blob)
-            if c == "doc_gaps":
-                np.cumsum(vals, out=vals)
-                first = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                vals -= np.repeat(np.concatenate(
-                    ([np.uint64(0)], vals))[first], lens)
-            out[c][pos] = vals
-    for i in np.flatnonzero(~var):
-        dec = CODECS[codecs[i]][1]
-        s, e = starts[i], starts[i + 1]
-        gaps, tfs, dls = (data[off[i]:off[i + 1]]
-                          for off, data in cols.values())
-        out["doc_gaps"][s:e] = delta_decode(dec(gaps))
-        out["tfs"][s:e], out["dls"][s:e] = dec(tfs), dec(dls)
+        for packed, sel in ((False, var[a:b]), (True, ~var[a:b])):
+            if not sel.any():
+                continue
+            lens = n[a:b][sel]
+            pos = np.flatnonzero(np.repeat(sel, n[a:b])) + starts[a]
+            rows = np.flatnonzero(sel) + a
+            for c, (off, data) in cols.items():
+                if packed:
+                    vals = pack128_decode_rows(data, off[rows], off[rows + 1])
+                elif sel.all():
+                    vals = varint_decode(data[off[a]:off[b]])
+                else:
+                    vals = varint_decode(data[off[a]:off[b]][
+                        np.repeat(sel, np.diff(off[a:b + 1]))])
+                if c == "doc_gaps":
+                    np.cumsum(vals, out=vals)
+                    first = np.concatenate(([0], np.cumsum(lens)[:-1]))
+                    vals -= np.repeat(np.concatenate(
+                        ([np.uint64(0)], vals))[first], lens)
+                out[c][pos] = vals
     return out["doc_gaps"].view(np.int64), out["tfs"], out["dls"], starts
 
 

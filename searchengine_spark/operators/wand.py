@@ -28,10 +28,14 @@ An index that fits the driver (``resident_index``: its postings in a
 share of the driver's memory, its Arrow size in one collect, and no
 larger than the largest index measured) is served without Spark on the
 query path: ``ResidentIndex`` decodes the segments once into driver-side
-arrays and feeds the same kernel the same per-shard rows, so results are
-bit-identical to the plans above; those stay the path for larger
-indexes. ``serve_topk`` / ``serve_topk_batch`` apply that rule, once per
-``doc_segments`` frame, for the engine and the registry entries alike.
+arrays, turns every posting into its BM25 impact at build, and scores a
+query in one pass over the whole index with exact MaxScore pruning
+(terms too weak to lift a doc into the top k alone only score the other
+terms' docs). A doc's score is the same float sum in the same term order
+as in the per-shard kernel, so results are bit-identical to the plans
+above; those stay the path for larger indexes. ``serve_topk`` /
+``serve_topk_batch`` apply that rule, once per ``doc_segments`` frame,
+for the engine and the registry entries alike.
 
 Correctness contract: identical (doc_id, score) top-k as the exhaustive
 relational scorer (operators/topk.py score_topk) under tie-break
@@ -132,31 +136,27 @@ def _canonical(postings: list[_Postings]) -> list[_Postings]:
                   key=lambda p: (p.term, int(p.docs[0]) if len(p.docs) else -1))
 
 
-def _weights(p: _Postings, idf: float, avgdl: float) -> np.ndarray:
-    """BM25 weight (qf = 1) of every posting in ``p``, in the float
-    association every scorer of this module has used, so scores are
-    bit-identical to the per-posting formula."""
-    tf = p.tfs.astype(np.float64)
-    dl = p.dls.astype(np.float64)
+def _weights(tfs: np.ndarray, dls: np.ndarray, idf, avgdl: float) -> np.ndarray:
+    """BM25 weight (qf = 1) of every posting, in the float association
+    every scorer of this module has used, so scores are bit-identical to
+    the per-posting formula. ``idf`` is a scalar or one value per
+    posting: IEEE products and quotients round the same either way."""
+    tf = tfs.astype(np.float64)
+    dl = dls.astype(np.float64)
     return idf * tf * (BM25_K1 + 1.0) / (
         tf + BM25_K1 * (1.0 - BM25_B + BM25_B * dl / avgdl)
     )
 
 
-def _dense_topk(
-    rows: list[tuple[np.ndarray, np.ndarray]], k: int,
-    exclude: DocIdBitmap | None = None,
+def _accumulate(
+    rows: list[tuple[np.ndarray, np.ndarray]],
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Top-k (doc_ids, scores) of the additive union of ``rows`` — each a
-    (docs, contributions) pair with docs unique within the row — under
-    (score desc, doc_id asc), tombstoned docs masked.
-
-    A doc's score sums its contributions in ``rows`` order starting from
-    0.0, so callers pass rows canonically ordered (``_canonical``). Ties
-    at the k-th score are all kept through the partition, so the doc_id
-    tie-break is exact."""
+    """(docs, scores) of every doc hit by ``rows`` — each a (docs,
+    contributions) pair, docs unique within the row — docs ascending. A
+    doc's score sums its contributions in ``rows`` order starting from
+    0.0, so callers pass rows canonically ordered (``_canonical``)."""
     rows = [(d, c) for d, c in rows if len(d)]
-    if not rows or k <= 0:
+    if not rows:
         return np.zeros(0, np.int64), np.zeros(0, np.float64)
     lo = min(int(d[0]) for d, _ in rows)
     hi = max(int(d[-1]) for d, _ in rows)
@@ -173,11 +173,20 @@ def _dense_topk(
         acc[i] += c
         hit[i] = True
     idx = np.flatnonzero(hit)
-    docs = idx + lo if space is None else space[idx]
-    if exclude is not None:
+    return (idx + lo if space is None else space[idx]), acc[idx]
+
+
+def _select(docs: np.ndarray, scores: np.ndarray, k: int,
+            exclude: DocIdBitmap | None = None,
+            ) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k of scored docs under (score desc, doc_id asc), tombstoned
+    docs masked. Ties at the k-th score are all kept through the
+    partition, so the doc_id tie-break is exact."""
+    if k <= 0:
+        return docs[:0], scores[:0]
+    if exclude is not None and len(docs):
         live = ~exclude.mask(docs)
-        idx, docs = idx[live], docs[live]
-    scores = acc[idx]
+        docs, scores = docs[live], scores[live]
     if len(scores) > k:
         kth = np.partition(scores, len(scores) - k)[len(scores) - k]
         keep = scores >= kth
@@ -186,13 +195,24 @@ def _dense_topk(
     return docs[order], scores[order]
 
 
+def _dense_topk(
+    rows: list[tuple[np.ndarray, np.ndarray]], k: int,
+    exclude: DocIdBitmap | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """Top-k (doc_ids, scores) of the additive union of ``rows``
+    (``_accumulate``) under (score desc, doc_id asc), tombstoned docs
+    masked (``_select``)."""
+    return _select(*_accumulate(rows), k, exclude)
+
+
 def _score_group(
     postings: list[_Postings], qf_map: dict[str, float],
     idf_map: dict[str, float], avgdl: float, k: int,
     exclude: DocIdBitmap | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """One group's (shard's) local top-k for one query."""
-    rows = [(p.docs, qf_map[p.term] * _weights(p, idf_map[p.term], avgdl))
+    rows = [(p.docs, qf_map[p.term]
+             * _weights(p.tfs, p.dls, idf_map[p.term], avgdl))
             for p in _canonical(postings) if p.term in qf_map]
     return _dense_topk(rows, k, exclude)
 
@@ -206,7 +226,8 @@ def _score_group_batch(
     doc_ids, scores). The group's rows are put in canonical order and
     turned into BM25 weight arrays ONCE; every query then runs the dense
     kernel over the shared weights scaled by its qf."""
-    weighted = [(p.term, p.docs, _weights(p, idf_map[p.term], avgdl))
+    weighted = [(p.term, p.docs,
+                 _weights(p.tfs, p.dls, idf_map[p.term], avgdl))
                 for p in _canonical(postings)]
     qids, docs, scores = [np.zeros(0, np.int32)], [np.zeros(0, np.int64)], \
         [np.zeros(0, np.float64)]
@@ -587,7 +608,8 @@ def resident_index(doc_segments: DataFrame, term_stats: DataFrame,
     if nbytes > _collect_budget_bytes(doc_segments.sparkSession):
         return None
     try:
-        return ResidentIndex(doc_segments, term_stats, n_docs, avgdl)
+        return ResidentIndex.from_frames(doc_segments, term_stats, n_docs,
+                                         avgdl)
     except (Py4JError, PySparkException, MemoryError) as e:
         warnings.warn(f"resident index not built, serving with the Spark "
                       f"plan: {type(e).__name__}: {str(e)[:200]}",
@@ -655,86 +677,198 @@ def serve_topk_batch(
                            idf_map=idf_map), "wand"
 
 
+#: impacts kept per term, highest first: the k-th of them, times qf, is a
+#: score that k docs reach, so it bounds a query's k-th best score from
+#: below for every k up to this depth (deeper k are scored unpruned)
+_IMPACT_DEPTH = 128
+#: relative slack on a float sum of per-term score bounds: a doc's score
+#: adds the same kind of values in another order, which moves its last
+#: bits by n ulps for n terms, far less than this
+_BOUND_SLACK = 1e-9
+#: postings per run while the build turns (tf, dl) into impacts, so its
+#: temporaries stay small whatever the index's size
+_IMPACT_CHUNK = 1 << 14
+#: the counts ``ResidentIndex.last_counts`` holds for the last call
+_COUNTS = ("postings", "scored", "candidates", "terms_skipped")
+
+
 class ResidentIndex:
     """Doc-sharded segments decoded once into driver-side columnar arrays
     — the reference Engine's load-into-RAM model (Engine.cs:32-96) for
-    an index that fits — scored by the same kernel as the Spark path.
+    an index that fits — and scored from precomputed BM25 impacts.
 
-    Built with one ``toArrow()`` of ``doc_segments`` (any layout the
-    DataFrame reads, ``g=*`` groups included) and one of ``term_stats``:
-    rows sorted by (term, shard) share three posting arrays, a term maps
-    to its row span, and the df dict answers idf with no lookup job, out-
-    of-vocabulary terms included. A query gathers its terms' rows per
-    shard and runs ``_score_group`` (or ``_score_group_batch``) on exactly
-    the rows the Spark plan's grouped map would get, so (doc_id, score)
-    are bit-identical; the shards' top-ks merge under (score desc,
-    doc_id asc) in numpy and return as an Arrow-backed DataFrame: no
-    scan, exchange or Python worker on the query path (a traced perfbench
-    run counts 0 Spark jobs per warm query, collect included)."""
+    Built from one ``toArrow()`` of ``doc_segments`` (any layout the
+    DataFrame reads, ``g=*`` groups included) and one of ``term_stats``
+    (``from_frames``): rows sorted by (term, shard) are decoded into one
+    doc array, ascending within each term, and each posting's qf = 1
+    BM25 weight (``_weights``' float expression, the term's idf from the
+    df table) is computed once and stored in place of its tf and dl.
+    Each term also keeps its highest ``_IMPACT_DEPTH`` impacts, sorted.
 
-    def __init__(self, doc_segments: DataFrame, term_stats: DataFrame,
-                 n_docs: int, avgdl: float):
-        self.spark = doc_segments.sparkSession
-        self.n_docs, self.avgdl = n_docs, avgdl
+    A query is scored in one pass over the whole index with exact
+    MaxScore pruning: k docs reach qf times a term's k-th impact, so the
+    largest such value θ bounds the k-th best score from below (θ = 0
+    with tombstones, which may remove those docs). The terms with the
+    smallest qf * max impact whose sum, with ``_BOUND_SLACK``, stays
+    strictly below θ cannot lift a doc into the top k alone; only the
+    other terms' docs are candidates, and each candidate is scored over
+    every query term in sorted term order (absent terms add nothing). A
+    doc's score is therefore the same float sum, in the same order, as
+    the per-shard kernel of the Spark plan, whose canonical rows are in
+    (term, first doc) order: (doc_id, score) are bit-identical to it.
+    With nothing pruned, the dense accumulator scores the union
+    (``_accumulate``); both select with ``_select``. The top k returns
+    as an Arrow-backed DataFrame: no scan, exchange or Python worker on
+    the query path (a traced perfbench run counts 0 Spark jobs per warm
+    query, collect included). ``last_counts`` holds the last call's
+    postings in the query terms' lists, postings scored, candidates and
+    terms skipped, summed over a batch."""
+
+    def __init__(self, table, df: dict, n_docs: int, avgdl: float,
+                 spark=None):
+        self.spark = spark
+        self.last_counts = dict.fromkeys(_COUNTS, 0)
+        table = table.sort_by([("term", "ascending"), ("shard", "ascending")])
+        docs, tfs, dls, starts = decode_table(table)
+        row_terms = table.column("term").to_pylist()
+        del table
+        first = [i for i in range(len(row_terms))
+                 if i == 0 or row_terms[i] != row_terms[i - 1]]
+        terms = [row_terms[i] for i in first]
+        t_start = starts[first + [len(row_terms)]]
+        del row_terms, first, starts
+        lens = np.diff(t_start)
+        dfs = np.array([df.get(t, 0) or 0 for t in terms], np.int64)
+        uniq, inv = np.unique(dfs, return_inverse=True)
+        idf = np.array([idf_np(int(d), n_docs) if d > 0 else 0.0
+                        for d in uniq])[inv]
+        # impacts overwrite the tfs buffer run by run: a run's tfs are
+        # read before its impacts are written, and later runs are untouched
+        imp = tfs.view(np.float64)
+        edges = np.unique(np.concatenate((
+            [0], np.searchsorted(t_start, np.arange(
+                _IMPACT_CHUNK, t_start[-1], _IMPACT_CHUNK)), [len(terms)])))
+        top_start = np.zeros(len(terms) + 1, np.int64)
+        np.cumsum(np.minimum(lens, _IMPACT_DEPTH), out=top_start[1:])
+        top = np.empty(top_start[-1])
+        for ta, tb in zip(edges[:-1], edges[1:]):
+            a, b = t_start[ta], t_start[tb]
+            tid = np.repeat(np.arange(tb - ta), lens[ta:tb])
+            w = _weights(tfs[a:b], dls[a:b], idf[ta:tb][tid], avgdl)
+            d = docs[a:b]
+            if ((np.diff(d) <= 0) & (tid[1:] == tid[:-1])).any():
+                # rows of one term out of doc order: sort the term's docs
+                o = np.lexsort((d, tid))
+                docs[a:b], w = d[o], w[o]
+            imp[a:b] = w
+            o = np.lexsort((-w, tid))
+            rank = np.arange(b - a) - (t_start[ta:tb] - a)[tid]
+            top[top_start[ta]:top_start[tb]] = w[o][rank < _IMPACT_DEPTH]
+        del tfs, dls
+        self.docs, self.imp, self.t_start = docs, imp, t_start
+        self.top, self.top_start = top, top_start
+        self.vocab = {t: i for i, t in enumerate(terms)
+                      if dfs[i] > 0 and lens[i] > 0}
+
+    @classmethod
+    def from_frames(cls, doc_segments: DataFrame, term_stats: DataFrame,
+                    n_docs: int, avgdl: float) -> "ResidentIndex":
+        """The index of a ``doc_segments`` frame and its ``term_stats``:
+        one ``toArrow()`` of each."""
         table = doc_segments.select(
             "shard", "term", "n", "codec", "doc_gaps", "tfs", "dls",
-        ).toArrow().sort_by([("term", "ascending"), ("shard", "ascending")])
-        self.docs, self.tfs, self.dls, self.starts = decode_table(table)
-        self.shards = table.column("shard").to_numpy()
-        self.spans: dict[str, list[int]] = {}
-        for i, term in enumerate(table.column("term").to_pylist()):
-            self.spans.setdefault(term, [i, i])[1] = i + 1
+        ).toArrow()
         stats = term_stats.select("term", "df").toArrow()
-        self.df = dict(zip(stats.column("term").to_pylist(),
-                           stats.column("df").to_pylist()))
+        return cls(table, dict(zip(stats.column("term").to_pylist(),
+                                   stats.column("df").to_pylist())),
+                   n_docs, avgdl, doc_segments.sparkSession)
 
-    def _idf(self, terms) -> dict[str, float]:
-        return {t: idf_np(self.df[t], self.n_docs)
-                for t in terms if self.df.get(t, 0) > 0}
-
-    def _groups(self, terms) -> list[list[_Postings]]:
-        """The posting rows of ``terms``, grouped by shard."""
-        groups: dict[int, list[_Postings]] = {}
-        for t in terms:
-            lo, hi = self.spans.get(t, (0, 0))
-            for r in range(lo, hi):
-                s, e = self.starts[r], self.starts[r + 1]
-                groups.setdefault(int(self.shards[r]), []).append(_Postings(
-                    t, self.docs[s:e], self.tfs[s:e], self.dls[s:e]))
-        return list(groups.values())
+    def _topk(self, qf: dict[str, float], k: int, exclude, counts: dict,
+              ) -> tuple[np.ndarray, np.ndarray]:
+        """One query's top-k (docs, scores), MaxScore-pruned; adds its
+        counts to ``counts``."""
+        terms = sorted(t for t in qf if t in self.vocab)
+        if not terms or k <= 0:
+            return np.zeros(0, np.int64), np.zeros(0, np.float64)
+        ids = [self.vocab[t] for t in terms]
+        qfs = [qf[t] for t in terms]
+        spans = [(self.t_start[i], self.t_start[i + 1]) for i in ids]
+        theta = 0.0
+        if exclude is None:
+            for i, f in zip(ids, qfs):
+                s, e = self.top_start[i], self.top_start[i + 1]
+                if k <= e - s:
+                    theta = max(theta, f * self.top[s + k - 1])
+        bound = [f * self.top[self.top_start[i]] for i, f in zip(ids, qfs)]
+        skip, total = set(), 0.0
+        for j in sorted(range(len(terms)), key=bound.__getitem__):
+            total += bound[j]
+            if total * (1.0 + _BOUND_SLACK) >= theta:
+                break
+            skip.add(j)
+        postings = sum(int(e - s) for s, e in spans)
+        counts["postings"] += postings
+        counts["terms_skipped"] += len(skip)
+        if not skip:
+            docs, scores = _accumulate([(self.docs[s:e], f * self.imp[s:e])
+                                        for (s, e), f in zip(spans, qfs)])
+            counts["scored"] += postings
+        else:
+            # candidates: the docs of the terms not skipped, marked over
+            # their doc span; a skipped term adds only at candidates
+            ess = [self.docs[s:e] for j, (s, e) in enumerate(spans)
+                   if j not in skip]
+            lo = min(int(d[0]) for d in ess)
+            hi = max(int(d[-1]) for d in ess)
+            hit = np.zeros(hi - lo + 1, bool)
+            for d in ess:
+                hit[d - lo] = True
+            docs = np.flatnonzero(hit) + lo
+            acc = np.zeros(hi - lo + 1)
+            for j, ((s, e), f) in enumerate(zip(spans, qfs)):
+                d, w = self.docs[s:e], self.imp[s:e]
+                if j in skip:
+                    a, b = np.searchsorted(d, (lo, hi + 1))
+                    at = np.flatnonzero(hit[d[a:b] - lo]) + a
+                    d, w = d[at], w[at]
+                acc[d - lo] += f * w
+                counts["scored"] += len(d)
+            scores = acc[docs - lo]
+        counts["candidates"] += len(docs)
+        if theta > 0:
+            # the top k score at least theta: drop the rest before selecting
+            keep = scores >= theta
+            docs, scores = docs[keep], scores[keep]
+        return _select(docs, scores, k, exclude)
 
     def topk(self, query: str, k: int = 10, exclude=None) -> DataFrame:
         """``wand_topk`` over the resident arrays: (doc_id, score)."""
-        qf_map = query_qf(query)
-        idf_map = self._idf(qf_map)
-        ex = _exclude_bitmap(exclude)
-        parts = [_score_group(g, qf_map, idf_map, self.avgdl, k, ex)
-                 for g in self._groups(idf_map)]
-        docs = np.concatenate([np.zeros(0, np.int64), *(d for d, _ in parts)])
-        scores = np.concatenate([np.zeros(0), *(s for _, s in parts)])
-        order = np.lexsort((docs, -scores))[:k]
-        return self.spark.createDataFrame(
-            _topk_frame(docs[order], scores[order]), _TOPK_SCHEMA)
+        counts = dict.fromkeys(_COUNTS, 0)
+        docs, scores = self._topk(query_qf(query), k,
+                                  _exclude_bitmap(exclude), counts)
+        self.last_counts = counts
+        return self.spark.createDataFrame(_topk_frame(docs, scores),
+                                          _TOPK_SCHEMA)
 
     def topk_batch(self, queries: list[tuple[int, str]], k: int = 10,
                    exclude=None) -> DataFrame:
         """``wand_topk_batch`` over the resident arrays: (query_id, rank,
         doc_id, score)."""
         qf_maps = {int(qid): query_qf(q) for qid, q in queries}
-        idf_map = self._idf({t for m in qf_maps.values() for t in m})
         ex = _exclude_bitmap(exclude)
-        parts = [_score_group_batch(g, qf_maps, idf_map, self.avgdl, k, ex)
-                 for g in self._groups(idf_map)]
-        qids, docs, scores = (
-            np.concatenate([np.zeros(0, dt), *(p[i] for p in parts)])
-            for i, dt in enumerate((np.int32, np.int64, np.float64)))
-        order = np.lexsort((docs, -scores, qids))
-        qids, docs, scores = qids[order], docs[order], scores[order]
-        rank = np.arange(len(qids)) - np.searchsorted(qids, qids) + 1
-        keep = rank <= k
+        counts = dict.fromkeys(_COUNTS, 0)
+        qids, ranks, docs, scores = [np.zeros(0, np.int32)], \
+            [np.zeros(0, np.int32)], [np.zeros(0, np.int64)], [np.zeros(0)]
+        for qid, qf in sorted(qf_maps.items()):
+            d, s = self._topk(qf, k, ex, counts)
+            qids.append(np.full(len(d), qid, np.int32))
+            ranks.append(np.arange(1, len(d) + 1, dtype=np.int32))
+            docs.append(d)
+            scores.append(s)
+        self.last_counts = counts
         return self.spark.createDataFrame(pd.DataFrame(
-            {"query_id": pd.Series(qids[keep], dtype="int32"),
-             "rank": pd.Series(rank[keep], dtype="int32"),
-             "doc_id": pd.Series(docs[keep], dtype="int64"),
-             "score": pd.Series(scores[keep], dtype="float64")}),
+            {"query_id": pd.Series(np.concatenate(qids), dtype="int32"),
+             "rank": pd.Series(np.concatenate(ranks), dtype="int32"),
+             "doc_id": pd.Series(np.concatenate(docs), dtype="int64"),
+             "score": pd.Series(np.concatenate(scores), dtype="float64")}),
             _BATCH_RESULT_SCHEMA)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -81,6 +82,66 @@ def test_pack128_roundtrip(vals):
 
     arr = np.array(vals, dtype=np.uint64)
     assert pack128_decode(pack128_encode(arr)).tolist() == vals
+
+
+def _pack128_decode_per_block(buf: bytes) -> np.ndarray:
+    """The block-at-a-time pack128 decoder the vectorized one replaced,
+    kept as its reference."""
+    from searchengine_spark.functions.codec import PACK_BLOCK
+
+    b = np.frombuffer(buf, dtype=np.uint8)
+    if b.size == 0:
+        return np.empty(0, np.uint64)
+    first_end = int(np.nonzero((b & 0x80) == 0)[0][0])
+    n = int(varint_decode(bytes(b[:first_end + 1]))[0])
+    out = np.empty(n, np.uint64)
+    pos = first_end + 1
+    got = 0
+    while got < n:
+        m = min(PACK_BLOCK, n - got)
+        w = int(b[pos])
+        pos += 1
+        if w == 0:
+            out[got:got + m] = 0
+        else:
+            nby = (m * w + 7) // 8
+            bits = np.unpackbits(
+                b[pos:pos + nby], bitorder="little", count=m * w
+            ).reshape(m, w).astype(np.uint64)
+            out[got:got + m] = (
+                bits << np.arange(w, dtype=np.uint64)
+            ).sum(axis=1, dtype=np.uint64)
+            pos += nby
+        got += m
+    return out
+
+
+@pytest.mark.parametrize("n", [0, 1, 127, 128, 129, 10_000])
+def test_pack128_decode_equals_per_block_decoder(n):
+    """The vectorized pack128 decoder returns the per-block decoder's
+    bytes for every block width 0-64 (one list per width, with values of
+    exactly that width, bit 63 set at width 64) and for lists mixing all
+    widths, so full and partial blocks of one width decode together."""
+    from searchengine_spark.functions.codec import pack128_decode, pack128_encode
+
+    rng = np.random.default_rng(n)
+    for w in range(65):
+        top = np.uint64((1 << w) - 1) if w else np.uint64(0)
+        vals = rng.integers(0, 2**64, n, dtype=np.uint64) & top
+        if n and w:
+            vals[::97] = top            # every block reaches width w
+        buf = pack128_encode(vals)
+        got = pack128_decode(buf)
+        assert got.dtype == np.uint64
+        assert got.tobytes() == _pack128_decode_per_block(buf).tobytes()
+        assert got.tobytes() == vals.tobytes()
+    masks = np.array([(1 << w) - 1 for w in range(65)], np.uint64)
+    block_w = rng.integers(0, 65, -(-n // 128))
+    mixed = rng.integers(0, 2**64, n, dtype=np.uint64) \
+        & np.repeat(masks[block_w], 128)[:n]
+    buf = pack128_encode(mixed)
+    assert pack128_decode(buf).tobytes() \
+        == _pack128_decode_per_block(buf).tobytes() == mixed.tobytes()
 
 
 def test_pack128_beats_varint_on_tight_gaps():

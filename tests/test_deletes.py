@@ -186,6 +186,53 @@ def test_resident_copy_never_stale(spark, small, tmp_path_factory):
     assert not set(dead) & {r.doc_id for r in batch}
 
 
+@pytest.mark.parametrize("committed", [True, False])
+def test_load_finishes_interrupted_purge_swap(spark, small, tmp_path_factory,
+                                              monkeypatch, committed):
+    """A crash between purge_deleted's two renames (the live segments
+    renamed aside, the rewritten ``.purge`` copy not yet in) leaves no
+    doc_segments.parquet. load() puts the committed copy in, or the
+    aside one back when the copy has no ``_SUCCESS``, and the reloaded
+    engine serves the rows served before the crash, float bits
+    included; a later purge then completes."""
+    out = str(tmp_path_factory.mktemp("delidx_swap"))
+    run_build(spark, small, out, num_doc_partitions=3, layouts=("doc",),
+              n_shards=N_SHARDS)
+    eng = SearchEngine.load(spark, out)
+    eng.delete_docs([d for d, _ in _ranked(eng.search(QUERY, k=3))])
+    queries = [(0, QUERY), (1, "bababa"), (2, "zumuqi qqqnever")]
+
+    def served(e):
+        return ([(r.doc_id, r.score) for r in e.search(QUERY, k=10).collect()],
+                sorted(e.search_batch(queries, k=10).collect()))
+
+    before = served(eng)
+    real = os.rename
+
+    def crash(src, dst):
+        if str(src).endswith(".purge"):
+            raise OSError("crash between the swap's renames")
+        real(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash)
+    with pytest.raises(OSError, match="crash"):
+        eng.purge_deleted(n_shards=N_SHARDS)
+    monkeypatch.setattr(os, "rename", real)
+    seg = os.path.join(out, "doc_segments.parquet")
+    assert not os.path.exists(seg) and os.path.isdir(seg + ".old")
+    if not committed:
+        os.remove(os.path.join(seg + ".purge", "_SUCCESS"))
+
+    fresh = SearchEngine.load(spark, out)
+    assert os.path.isdir(seg) and not os.path.exists(seg + ".old")
+    assert os.path.exists(seg + ".purge") == (not committed)
+    assert served(fresh) == before
+    assert fresh.last_search_mode == "resident"
+    fresh.purge_deleted(n_shards=N_SHARDS)
+    assert fresh.tombstones() == frozenset()
+    assert served(SearchEngine.load(spark, out)) == before
+
+
 def test_compact_applies_tombstones(spark, small, tmp_path_factory):
     """Incremental-index compaction drops tombstoned docs during the
     merge (Lucene model): merged == merge-of-live-docs, and the dropped
