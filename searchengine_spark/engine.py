@@ -33,6 +33,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchengine_spark.functions.bitmap import DocIdBitmap
 from searchengine_spark.operators.forward import CorpusScalars
 from searchengine_spark.operators.ingest import tf_from_doc_map
 from searchengine_spark.operators.topk import score_topk
@@ -85,10 +86,16 @@ class SearchEngine:
     #: without a Spark action. Valid for the engine's lifetime: deletes
     #: never move build-time stats (Lucene semantics, see purge_deleted).
     _df_memo: dict = field(default_factory=dict, repr=False)
-    #: mode actually served by the last search() call ("resident" |
-    #: "wand" | "term" | "exhaustive" | ...) — introspection for auto-mode
-    #: selection; "resident" is the doc-sharded scorer run in the driver.
+    #: mode actually served by the last search() or search_batch() call
+    #: ("resident" | "wand" | "term" | "exhaustive" | ...) — introspection
+    #: for auto-mode selection; "resident" is the doc-sharded scorer run
+    #: in the driver.
     last_search_mode: str | None = field(default=None, repr=False)
+    #: (stat key, doc ids) of tombstones.json as last read, and (that
+    #: set, its DocIdBitmap or None): re-read, and the bitmap rebuilt,
+    #: only when the file's (inode, mtime, size) changes
+    _tombs: tuple | None = field(default=None, repr=False)
+    _tomb_bitmap: tuple | None = field(default=None, repr=False)
 
     @staticmethod
     def load(spark: SparkSession, index_dir: str,
@@ -129,12 +136,31 @@ class SearchEngine:
     def tombstones(self) -> frozenset:
         """Deleted doc_ids (tombstones.json; empty set if none). Driver-
         sized by design — at 10^12 scale this becomes a Bloom/bitmap
-        sidecar, same masking semantics (operators/deletes.py)."""
+        sidecar, same masking semantics (operators/deletes.py). The file
+        is parsed once per version: every write (``delete_docs`` here or
+        in another engine on the same dir, ``purge_deleted``) replaces
+        or removes it, which changes its stat key."""
         p = self._tombstone_path()
-        if not os.path.exists(p):
-            return frozenset()
-        with open(p) as f:
-            return frozenset(int(d) for d in json.load(f))
+        try:
+            st = os.stat(p)
+            key = (st.st_ino, st.st_mtime_ns, st.st_size)
+        except FileNotFoundError:
+            key = None
+        if self._tombs is None or self._tombs[0] != key:
+            dead = frozenset()
+            if key is not None:
+                with open(p) as f:
+                    dead = frozenset(int(d) for d in json.load(f))
+            self._tombs = (key, dead)
+        return self._tombs[1]
+
+    def _tombstone_bitmap(self) -> DocIdBitmap | None:
+        """``tombstones()`` as the doc-sharded scorers' exclude mask
+        (None when nothing is deleted), built once per tombstone set."""
+        dead = self.tombstones()
+        if self._tomb_bitmap is None or self._tomb_bitmap[0] is not dead:
+            self._tomb_bitmap = (dead, DocIdBitmap(dead) or None)
+        return self._tomb_bitmap[1]
 
     def delete_docs(self, doc_ids) -> frozenset:
         """Tombstone docs: excluded from every subsequent search
@@ -265,7 +291,6 @@ class SearchEngine:
                 mode = "term"
             else:
                 mode = "exhaustive"
-        dead = self.tombstones()
         if mode == "wand" and self.doc_segments is None \
                 and self.term_segments is not None:
             mode = "term"
@@ -276,7 +301,7 @@ class SearchEngine:
             return wand_topk_terms(self.term_segments, query,
                                    self.term_stats, self.scalars.n_docs,
                                    self.scalars.avgdl, k=k,
-                                   exclude=dead or None,
+                                   exclude=self._tombstone_bitmap(),
                                    idf_map=self._idf_for(query_qf(query)))
         if mode == "wand":
             if self.doc_segments is None:
@@ -284,11 +309,12 @@ class SearchEngine:
             out, self.last_search_mode = serve_topk(
                 self.doc_segments, query, self.term_stats,
                 self.scalars.n_docs, self.scalars.avgdl, k=k,
-                exclude=dead or None, idf_for=self._idf_for)
+                exclude=self._tombstone_bitmap(), idf_for=self._idf_for)
             return out
         from searchengine_spark.operators.deletes import exclude_tf
 
-        tf = exclude_tf(tf_from_doc_map(self.doc_map), set(dead))
+        tf = exclude_tf(tf_from_doc_map(self.doc_map),
+                        set(self.tombstones()))
         score_mode = "bm25" if mode == "exhaustive" else mode
         return score_topk(tf, self.term_stats, self.scalars, query, k=k,
                           mode=score_mode)
@@ -839,15 +865,16 @@ class SearchEngine:
         Tombstoned docs are masked like single-query search, and idf
         comes from the same warm stats cache, so a batch of known terms
         runs no stats lookup job. A resident index (see ``search``)
-        scores the batch in the driver. ``spread``: explicit task count
+        scores the batch in the driver; the backend that served it is
+        recorded in ``last_search_mode``. ``spread``: explicit task count
         for the grouped scoring stage of the Spark plan (see
         operators/wand.py _spread_groups; default 4x parallelism)."""
         if self.doc_segments is None:
             raise ValueError("index has no doc-segment layout")
-        out, _ = serve_topk_batch(
+        out, self.last_search_mode = serve_topk_batch(
             self.doc_segments, queries, self.term_stats,
             self.scalars.n_docs, self.scalars.avgdl, k=k,
-            exclude=self.tombstones() or None, idf_for=self._idf_for,
+            exclude=self._tombstone_bitmap(), idf_for=self._idf_for,
             spread=spread)
         return out
 

@@ -33,9 +33,10 @@ query in one pass over the whole index with exact MaxScore pruning
 (terms too weak to lift a doc into the top k alone only score the other
 terms' docs). A doc's score is the same float sum in the same term order
 as in the per-shard kernel, so results are bit-identical to the plans
-above; those stay the path for larger indexes. ``serve_topk`` /
-``serve_topk_batch`` apply that rule, once per ``doc_segments`` frame,
-for the engine and the registry entries alike.
+above; those stay the path for larger indexes. The result stays in the
+driver (``HeldFrame``): reading it makes no JVM round trip.
+``serve_topk`` / ``serve_topk_batch`` apply that rule, once per
+``doc_segments`` frame, for the engine and the registry entries alike.
 
 Correctness contract: identical (doc_id, score) top-k as the exhaustive
 relational scorer (operators/topk.py score_topk) under tie-break
@@ -63,6 +64,7 @@ from searchengine_spark.functions.bitmap import DocIdBitmap
 from searchengine_spark.functions.scoring import B as BM25_B
 from searchengine_spark.functions.scoring import K1 as BM25_K1
 from searchengine_spark.functions.tokenize import tokenize_py
+from searchengine_spark.heldframe import HeldFrame
 from searchengine_spark.operators.segments import (
     decode_payload,
     decode_table,
@@ -498,11 +500,15 @@ def wand_topk_batch(
 
 #: share of the driver's available memory a resident index may use
 _RESIDENT_SHARE = 0.25
-#: driver (Python) bytes per posting while the resident copy is built:
-#: the peak RSS rise measured 30-49 B (17.1M- and 0.12M-posting indexes;
-#: per-row and per-term state weighs most on small ones), rounded up.
-#: The decoded arrays it keeps are 24 B of it (BENCH.md)
-_POSTING_BYTES = 64
+#: driver (Python) bytes the resident build takes at its peak, as a fixed
+#: part plus a part per posting. The Arrow reads, allocator and per-term
+#: state cost a roughly fixed amount; the decoded arrays scale. BENCH.md's
+#: measured peak RSS rises (0.12M postings 4.9 MB, 0.43M 27.2-27.6 MB,
+#: 4.27M 137.6 MB, 17.1M 490 MB) are each under 16 MiB + 32 B a posting
+#: (19.5, 29.2, 146.5 and 538 MiB), where a flat rate needs 64 B a
+#: posting at 0.43M but only 30-32 B at 4.27M and 17.1M
+_BUILD_FIXED_BYTES = 16 << 20
+_POSTING_BYTES = 32
 #: the largest index (postings) served resident: the largest whose
 #: resident build (10.4 s, 490 MB driver RSS) and warm latency (55 ms
 #: p50 against 1.6 s on the Spark plan) were measured, a 1.01M-turn
@@ -563,17 +569,18 @@ def _cgroup_headroom(proc: str = "/proc/self/cgroup",
 
 
 def _budget_postings() -> int:
-    """Postings the driver may hold decoded: ``_RESIDENT_SHARE`` of the
-    memory available to it (the OS's free physical memory, or the room
-    left under its cgroup limit when smaller) at ``_POSTING_BYTES`` each,
-    capped at ``_RESIDENT_MAX_POSTINGS``. The switch between the resident
-    and the Spark path (tests force the Spark path by patching it)."""
+    """Postings the driver may hold decoded: what ``_RESIDENT_SHARE`` of
+    the memory available to it (the OS's free physical memory, or the
+    room left under its cgroup limit when smaller) leaves after
+    ``_BUILD_FIXED_BYTES``, at ``_POSTING_BYTES`` each, capped at
+    ``_RESIDENT_MAX_POSTINGS``. The switch between the resident and the
+    Spark path (tests force the Spark path by patching it)."""
     avail = os.sysconf("SC_AVPHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
     cgroup = _cgroup_headroom()
     if cgroup is not None:
         avail = min(avail, cgroup)
-    return min(_RESIDENT_MAX_POSTINGS,
-               int(avail * _RESIDENT_SHARE) // _POSTING_BYTES)
+    room = int(avail * _RESIDENT_SHARE) - _BUILD_FIXED_BYTES
+    return min(_RESIDENT_MAX_POSTINGS, max(0, room) // _POSTING_BYTES)
 
 
 def _collect_budget_bytes(spark) -> int:
@@ -718,11 +725,13 @@ class ResidentIndex:
     (term, first doc) order: (doc_id, score) are bit-identical to it.
     With nothing pruned, the dense accumulator scores the union
     (``_accumulate``); both select with ``_select``. The top k returns
-    as an Arrow-backed DataFrame: no scan, exchange or Python worker on
-    the query path (a traced perfbench run counts 0 Spark jobs per warm
-    query, collect included). ``last_counts`` holds the last call's
-    postings in the query terms' lists, postings scored, candidates and
-    terms skipped, summed over a batch."""
+    as a ``HeldFrame``: a DataFrame whose rows stay in the driver, so
+    ``collect``, ``toPandas``, ``toArrow`` and ``count`` make no JVM call
+    and the query path has no scan, exchange, Python worker or Spark
+    job; a plan built on the result (``select``, a join) makes its JVM
+    frame once. ``last_counts`` holds the last call's postings in the
+    query terms' lists, postings scored, candidates and terms skipped,
+    summed over a batch."""
 
     def __init__(self, table, df: dict, n_docs: int, avgdl: float,
                  spark=None):
@@ -841,17 +850,16 @@ class ResidentIndex:
             docs, scores = docs[keep], scores[keep]
         return _select(docs, scores, k, exclude)
 
-    def topk(self, query: str, k: int = 10, exclude=None) -> DataFrame:
+    def topk(self, query: str, k: int = 10, exclude=None) -> HeldFrame:
         """``wand_topk`` over the resident arrays: (doc_id, score)."""
         counts = dict.fromkeys(_COUNTS, 0)
         docs, scores = self._topk(query_qf(query), k,
                                   _exclude_bitmap(exclude), counts)
         self.last_counts = counts
-        return self.spark.createDataFrame(_topk_frame(docs, scores),
-                                          _TOPK_SCHEMA)
+        return HeldFrame(self.spark, _TOPK_SCHEMA, [docs, scores])
 
     def topk_batch(self, queries: list[tuple[int, str]], k: int = 10,
-                   exclude=None) -> DataFrame:
+                   exclude=None) -> HeldFrame:
         """``wand_topk_batch`` over the resident arrays: (query_id, rank,
         doc_id, score)."""
         qf_maps = {int(qid): query_qf(q) for qid, q in queries}
@@ -866,9 +874,6 @@ class ResidentIndex:
             docs.append(d)
             scores.append(s)
         self.last_counts = counts
-        return self.spark.createDataFrame(pd.DataFrame(
-            {"query_id": pd.Series(np.concatenate(qids), dtype="int32"),
-             "rank": pd.Series(np.concatenate(ranks), dtype="int32"),
-             "doc_id": pd.Series(np.concatenate(docs), dtype="int64"),
-             "score": pd.Series(np.concatenate(scores), dtype="float64")}),
-            _BATCH_RESULT_SCHEMA)
+        return HeldFrame(self.spark, _BATCH_RESULT_SCHEMA,
+                         [np.concatenate(c)
+                          for c in (qids, ranks, docs, scores)])

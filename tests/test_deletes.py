@@ -186,6 +186,46 @@ def test_resident_copy_never_stale(spark, small, tmp_path_factory):
     assert not set(dead) & {r.doc_id for r in batch}
 
 
+def test_tombstones_read_once_per_file_version(eng, spark, monkeypatch):
+    """tombstones.json is parsed, and its bitmap built, once per version
+    of the file: repeat searches reuse both. Every change is seen by the
+    next search: a second delete_docs, a delete made through another
+    engine on the same dir, and purge_deleted removing the file."""
+    import json
+
+    real, reads = json.load, []
+
+    def counted(f, *args, **kwargs):
+        reads.append(f.name)
+        return real(f, *args, **kwargs)
+
+    monkeypatch.setattr(json, "load", counted)
+    top = [d for d, _ in _ranked(eng.search(QUERY, k=10))]
+    eng.delete_docs(top[:1])
+    masked = _ranked(eng.search(QUERY, k=10))
+    n, bitmap = len(reads), eng._tombstone_bitmap()
+    for _ in range(3):
+        assert _ranked(eng.search(QUERY, k=10)) == masked
+        eng.search_batch([(0, QUERY)], k=10).collect()
+    assert len(reads) == n and eng._tombstone_bitmap() is bitmap
+    assert top[0] not in {d for d, _ in masked}
+
+    def served():
+        got = _ranked(eng.search(QUERY, k=10))
+        assert eng.last_search_mode == "resident"
+        assert got == _ranked(eng.search(QUERY, k=10, mode="exhaustive"))
+        return {d for d, _ in got}
+
+    eng.delete_docs(top[1:2])
+    assert not set(top[:2]) & served()
+    SearchEngine.load(spark, eng.index_dir).delete_docs(top[2:3])
+    assert eng.tombstones() == frozenset(top[:3])
+    assert not set(top[:3]) & served()
+    eng.purge_deleted(n_shards=N_SHARDS)
+    assert eng.tombstones() == frozenset() and eng._tombstone_bitmap() is None
+    assert not set(top[:3]) & served()
+
+
 @pytest.mark.parametrize("committed", [True, False])
 def test_load_finishes_interrupted_purge_swap(spark, small, tmp_path_factory,
                                               monkeypatch, committed):

@@ -233,6 +233,10 @@ def test_auto_mode_serves_resident_without_stats(engine, spark_engine):
     assert a == b
     assert [(r.doc_id, r.score) for r in batch if r.query_id == 0] == a
     assert [r for r in batch if r.query_id == 1] == []
+    for eng, mode in ((engine, "resident"), (spark_engine, "wand")):
+        eng.last_search_mode = None
+        eng.search_batch([(0, q)], k=5)
+        assert eng.last_search_mode == mode
 
 
 def test_failed_resident_build_falls_back_to_spark(spark, engine,
@@ -304,9 +308,16 @@ def test_memory_budget_reads_cgroup_limit(tmp_path, monkeypatch):
     assert wand._cgroup_headroom(*v1_unlimited) is None
     assert wand._cgroup_headroom(str(tmp_path / "none"), "/") is None
 
-    monkeypatch.setattr(wand, "_cgroup_headroom",
-                        lambda: 40 * wand._POSTING_BYTES)
-    assert wand._budget_postings() == 10  # a quarter of the cgroup room
+    # a quarter of the cgroup room, less the build's fixed cost, at the
+    # per-posting cost
+    monkeypatch.setattr(wand, "_cgroup_headroom", lambda: 1 << 30)
+    assert wand._budget_postings() == ((256 - 16) << 20) // 32
+    monkeypatch.setattr(wand, "_cgroup_headroom", lambda: 4 * (
+        wand._BUILD_FIXED_BYTES + 10 * wand._POSTING_BYTES) + 3)
+    assert wand._budget_postings() == 10
+    for room in (4 * wand._BUILD_FIXED_BYTES, 1000, 0):  # fixed cost only
+        monkeypatch.setattr(wand, "_cgroup_headroom", lambda r=room: r)
+        assert wand._budget_postings() == 0
     monkeypatch.setattr(wand, "_cgroup_headroom", lambda: None)
     assert 0 < wand._budget_postings() <= wand._RESIDENT_MAX_POSTINGS
 
