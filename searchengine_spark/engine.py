@@ -91,11 +91,10 @@ class SearchEngine:
     #: for auto-mode selection; "resident" is the doc-sharded scorer run
     #: in the driver.
     last_search_mode: str | None = field(default=None, repr=False)
-    #: (stat key, doc ids) of tombstones.json as last read, and (that
-    #: set, its DocIdBitmap or None): re-read, and the bitmap rebuilt,
-    #: only when the file's (inode, mtime, size) changes
+    #: (stat key, doc ids, their DocIdBitmap or None) of tombstones.json
+    #: as last read: re-read only when the file's (inode, mtime, size)
+    #: changes
     _tombs: tuple | None = field(default=None, repr=False)
-    _tomb_bitmap: tuple | None = field(default=None, repr=False)
 
     @staticmethod
     def load(spark: SparkSession, index_dir: str,
@@ -140,6 +139,15 @@ class SearchEngine:
         is parsed once per version: every write (``delete_docs`` here or
         in another engine on the same dir, ``purge_deleted``) replaces
         or removes it, which changes its stat key."""
+        return self._read_tombstones()[1]
+
+    def _tombstone_bitmap(self) -> DocIdBitmap | None:
+        """``tombstones()`` as the doc-sharded scorers' exclude mask
+        (None when nothing is deleted), built once per file version."""
+        return self._read_tombstones()[2]
+
+    def _read_tombstones(self) -> tuple:
+        """``_tombs``, refreshed if the file changed since it was read."""
         p = self._tombstone_path()
         try:
             st = os.stat(p)
@@ -151,16 +159,8 @@ class SearchEngine:
             if key is not None:
                 with open(p) as f:
                     dead = frozenset(int(d) for d in json.load(f))
-            self._tombs = (key, dead)
-        return self._tombs[1]
-
-    def _tombstone_bitmap(self) -> DocIdBitmap | None:
-        """``tombstones()`` as the doc-sharded scorers' exclude mask
-        (None when nothing is deleted), built once per tombstone set."""
-        dead = self.tombstones()
-        if self._tomb_bitmap is None or self._tomb_bitmap[0] is not dead:
-            self._tomb_bitmap = (dead, DocIdBitmap(dead) or None)
-        return self._tomb_bitmap[1]
+            self._tombs = (key, dead, DocIdBitmap(dead) or None)
+        return self._tombs
 
     def delete_docs(self, doc_ids) -> frozenset:
         """Tombstone docs: excluded from every subsequent search

@@ -24,13 +24,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StructType,
-    _create_row,
-)
+from pyspark.sql.types import DoubleType, IntegerType, LongType, Row, StructType
 
 #: numpy dtype of each Spark type a held frame may carry (its pandas and
 #: Arrow types follow from it, as in Spark's own conversion of a column
@@ -44,17 +38,17 @@ class HeldFrame(DataFrame):
     per field of ``schema`` (non-nullable numeric fields only)."""
 
     def __new__(cls, *args, **kwargs):
+        # DataFrame.__new__ takes (jdf, session) and calls __init__ with
+        # them; a held frame is made from its columns instead
         return object.__new__(cls)
 
     def __init__(self, spark, schema: StructType, columns):
-        self._session = spark
-        self._sc = spark._sc
-        self.is_cached = False
-        self._support_repr_html = False
         self._held_schema = schema
         self._held = [np.asarray(c, _NUMPY[f.dataType])
                       for f, c in zip(schema.fields, columns, strict=True)]
-        self._held_jdf = None
+        # pyspark sets its own attributes; its _jdf = None goes through
+        # the setter below, so the JVM frame is built on first use
+        DataFrame.__init__(self, None, spark)
 
     @property
     def _jdf(self):
@@ -64,6 +58,10 @@ class HeldFrame(DataFrame):
                 self.toArrow(), self._held_schema)._jdf
         return self._held_jdf
 
+    @_jdf.setter
+    def _jdf(self, jdf) -> None:
+        self._held_jdf = jdf
+
     @property
     def schema(self) -> StructType:
         return self._held_schema
@@ -72,8 +70,8 @@ class HeldFrame(DataFrame):
         return len(self._held[0])
 
     def collect(self) -> list:
-        names = self.columns
-        return [_create_row(names, values)
+        row = Row(*self.columns)
+        return [row(*values)
                 for values in zip(*(c.tolist() for c in self._held))]
 
     def toPandas(self) -> pd.DataFrame:

@@ -78,6 +78,10 @@ def _same_as_spark(held: HeldFrame) -> None:
     assert held.count() == built.count() == len(rows)
     assert held.schema == built.schema
     assert held.columns == built.columns and held.dtypes == built.dtypes
+    # every attribute pyspark's own constructor sets is set on the held
+    # frame too (_jdf is its property)
+    fresh = DataFrame(held._jdf, held.sparkSession)
+    assert set(vars(fresh)) - {"_jdf"} <= set(vars(held))
 
 
 def test_warm_reads_make_no_jvm_call(spark, engine, monkeypatch):
